@@ -1,10 +1,12 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query registry of the package: the entry points an outside harness calls.
 
-``entry(spark)`` — flagship 3-hop ranked join on sf0.001.
-``queries()`` — every implemented operator from SURVEY.md §2 plus the
-training-data operator families, one callable per query.
-``oracle_sql()`` — DuckDB-equivalent ANSI SQL for each (omitted only for
-genuinely FP-order-sensitive or non-SQL ops; those get rows-only checks).
+``entry(spark)`` — the merged-node profile of the star graph built by
+the GrEBI pipeline operators (``plans.parity.graph_merge_nodes``) on
+sf0.001.
+``queries()`` — the GrEBI-surface parity queries (ingest, merge,
+groups, edges, Neo4j pivot, Cypher, KV, search, incremental verbs) plus
+the transitive-closure descendant counts, one callable per query.
+``oracle_sql()`` — the DuckDB SQL each is hash-checked against.
 """
 
 from __future__ import annotations
@@ -13,48 +15,16 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from grebi_spark.functions import dedup as _dedup
-from grebi_spark.functions import multimodal as _multimodal
-from grebi_spark.functions import similarity as _similarity
-from grebi_spark.functions import text as _text
-from grebi_spark.functions import training as _training
-from grebi_spark.plans import api_surface as _api_surface
 from grebi_spark.plans import closure as _closure
-from grebi_spark.plans import graph_analytics as _graph_analytics
-from grebi_spark.plans import layout as _layout
 from grebi_spark.plans import parity as _parity
-from grebi_spark.plans import profiling as _profiling
-from grebi_spark.plans import relational as _relational
-from grebi_spark.plans import relational2 as _relational2
-from grebi_spark.plans import search as _search
-from grebi_spark.plans import temporal as _temporal
-from grebi_spark.streaming import ops as _streaming
 
-_MODULES = (
-    _relational,
-    _relational2,
-    _search,
-    _api_surface,
-    _closure,
-    _graph_analytics,
-    _layout,
-    _parity,
-    _profiling,
-    _temporal,
-    _text,
-    _training,
-    _dedup,
-    _similarity,
-    _multimodal,
-    _streaming,
-)
+_MODULES = (_parity, _closure)
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001: the 3-hop ranked join
-    (customer → orders → lineitem → part, revenue-ranked) — the relational
-    shape of queries/mouse_genes_to_human_diseases.cypher."""
-    return _relational.q3_shipping_priority(spark, "/root/testdata/sf0.001")
+    """Flagship query on the sf0.001 harness tables: melt → assign →
+    merge, then per merged node its property count and provenance."""
+    return _parity.graph_merge_nodes(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -72,9 +42,7 @@ def oracle_sql() -> dict[str, str]:
 
 
 def skipped() -> dict[str, str]:
-    """Queries auto-unregistered by an environment gate, with the reason —
-    surfaced in the bench record so the driver sees WHY a name is absent."""
-    out: dict[str, str] = {}
-    for mod in _MODULES:
-        out.update(getattr(mod, "SKIPPED", {}))
-    return out
+    """Queries unregistered by an environment gate, with the reason.
+    No retained query is gated; the function stays for callers that
+    use it."""
+    return {}

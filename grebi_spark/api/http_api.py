@@ -37,8 +37,9 @@ container has no web framework, and the surface is nine GET routes.
 from __future__ import annotations
 
 import json
-import re
+import sys
 import threading
+import traceback
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
@@ -154,6 +155,35 @@ def summary_document(subgraph: str, graph: BuiltGraph) -> dict:
     return summary_json(graph.index, subgraph)
 
 
+# the largest page any paged route serves; a larger ``size`` is cut to it
+MAX_PAGE_SIZE = 100
+# Spark's OFFSET/LIMIT take 32-bit ints
+_MAX_ROW = 2**31 - 1
+
+
+class BadRequest(ValueError):
+    """A client error, answered with 400 and this message."""
+
+
+def _paging(query: dict[str, list[str]]) -> tuple[int, int]:
+    """``(page, size)`` from the query string: non-negative integers,
+    ``size`` capped at ``MAX_PAGE_SIZE``."""
+    got = []
+    for key, default in (("page", "0"), ("size", "10")):
+        raw = (query.get(key) or [default])[0]
+        try:
+            value = int(raw)
+        except ValueError:
+            value = -1
+        if value < 0:
+            raise BadRequest(f"{key} must be a non-negative integer")
+        got.append(value)
+    page, size = got[0], min(got[1], MAX_PAGE_SIZE)
+    if (page + 1) * size > _MAX_ROW:
+        raise BadRequest("page * size is out of range")
+    return page, size
+
+
 def _rows(df) -> list[dict]:
     return [r.asDict(recursive=True) for r in df.collect()]
 
@@ -258,7 +288,7 @@ class GrebiApiServer:
             if tail == ["summary"]:
                 return 200, summary_document(rest[1], g)
             if tail == ["search"]:
-                page, size = int(g1("page", "0")), int(g1("size", "10"))
+                page, size = _paging(query)
                 # every non-reserved query param is a WHOLE_FIELD filter
                 # (GrebiApi.java:199-211); a leading "-" negates it, and
                 # includeObsoleteEntries drops the default obsolete
@@ -343,7 +373,7 @@ class GrebiApiServer:
                 if len(tail) == 2:
                     doc = node_document(g, node_id)
                     return (200, doc) if doc else (404, {"error": "no such node"})
-                page, size = int(g1("page", "0")), int(g1("size", "10"))
+                page, size = _paging(query)
                 if tail[2] == "incoming_edges":
                     rows = _rows(
                         incoming_edges(g, node_id, page=page, size=size,
@@ -386,8 +416,13 @@ class GrebiApiServer:
                 u = urlparse(self.path)
                 try:
                     status, body = api.handle(u.path, parse_qs(u.query))
-                except Exception as exc:  # surface errors as JSON 500s
-                    status, body = 500, {"error": f"{type(exc).__name__}: {exc}"}
+                except BadRequest as exc:
+                    status, body = 400, {"error": str(exc)}
+                except Exception:
+                    # the exception text stays in the server's log: it
+                    # can carry paths and plan fragments
+                    traceback.print_exc(file=sys.stderr)
+                    status, body = 500, {"error": "internal server error"}
                 data = json.dumps(body).encode()
                 self.send_response(status)
                 self.send_header("Content-Type", "application/json")

@@ -65,7 +65,7 @@ type's count changed.
 
 Equivalence with a from-scratch build over the union of sources is the
 correctness contract, asserted by ``tests/test_incremental.py`` and by
-the ``incremental_*`` oracle board queries (plans/parity.py); the same
+the ``incremental_*`` oracle parity queries (plans/parity.py); the same
 tests assert the delta paths' materialise inputs are delta-sized.
 """
 

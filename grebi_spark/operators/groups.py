@@ -13,11 +13,9 @@ of near-cliques (every entity contributes a star over its aliases), so the
 effective diameter is tiny (≈2–4) and the loop converges in a handful of
 iterations; each iteration is one shuffle join + aggregate, and
 ``localCheckpoint`` truncates the plan lineage so the loop stays O(1) per
-round. For adversarial high-diameter graphs
-``connected_components_star`` (Kiveris et al., "Connected Components in
-MapReduce and Beyond") provides the same (id, component) contract with
-O(log² n) convergence on any topology — ``build_groups`` selects via
-``algorithm=``.
+round. Pointer jumping halves a chain's distance to its root every
+round, so even a high-diameter chain converges in O(log diameter)
+rounds.
 
 Canonical id per component = argmin by the reference's readability score
 (grebi:* wins, then biolink:*, then CURIE-ish, then most-alphabetic —
@@ -48,9 +46,8 @@ def id_score(col: Column) -> Column:
 # Label tables at or under this row count take the broadcast round (the
 # whole per-round update as ONE shuffle + two map-side hash joins against
 # the broadcast labels); larger graphs keep the shuffle-join round. The
-# guard is exact (a count of the materialized init frame), the same
-# pattern as graph_analytics.max_part_key: fast path only when provably
-# safe, identical results either way.
+# guard is exact (a count of the materialized init frame): fast path
+# only when provably safe, identical results either way.
 _CC_BCAST_MAX_LABELS = 2_000_000
 
 
@@ -181,108 +178,10 @@ def connected_components(
     return labels
 
 
-def _swap(e: DataFrame) -> DataFrame:
-    return e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-
-
-def connected_components_star(
-    edges: DataFrame, max_iterations: int = 50
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
-    the high-diameter-safe alternative to min-label propagation, closing
-    the documented limitation of ``connected_components``: label
-    propagation needs O(diameter) rounds (pointer jumping brings it to
-    O(log d)); the star algorithm contracts the graph itself and
-    converges in O(log² n) rounds on ANY topology, each round two
-    edge-keyed shuffles.
-
-    large-star: every node's strictly-larger neighbours re-attach to
-    the min of its neighbourhood (incl. itself); small-star: every
-    node's ≤-neighbours and the node itself attach to the neighbourhood
-    min. At fixpoint the edge set is a union of stars (v → component
-    min), read off directly as the label table. Same contract as
-    ``connected_components``: (id, component), component = min vertex
-    id by string order — interchangeable, and proven result-identical
-    in tests (chain, star, random, and clique fixtures)."""
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev_mat = None
-    # each round's |edges| is carried forward: round r's e.count() IS
-    # round r-1's ss.count(), so recounting the checkpointed frame was
-    # one redundant job per round (guide §1.2: don't compute things
-    # twice). Python's `and` keeps the expensive subtract gated on the
-    # counts matching first.
-    n_e = e.count()
-    for _ in range(max_iterations):
-        # LARGE-STAR over the symmetric neighbourhood
-        sym = e.unionAll(_swap(e))
-        mins = sym.groupBy("src").agg(F.min("dst").alias("mn"))
-        ls = (
-            sym.join(mins, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(
-                F.col("dst").alias("src"),
-                F.least(F.col("mn"), F.col("src")).alias("dst"),
-            )
-            .filter(F.col("src") != F.col("dst"))
-            # no distinct here: ls feeds ONLY the hi projection below,
-            # whose own distinct dedups the same rows (its partial
-            # aggregate already combines duplicates map-side) — the
-            # extra Exchange + dedup pass bought nothing (guide §2.4:
-            # a distinct on data that is deduped again right after)
-        )
-        # SMALL-STAR over the (hi → lo) orientation
-        hi = (
-            ls.select(
-                F.greatest("src", "dst").alias("src"),
-                F.least("src", "dst").alias("dst"),
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        mins2 = hi.groupBy("src").agg(F.min("dst").alias("mn"))
-        attach_nb = hi.join(mins2, "src").select(
-            F.col("dst").alias("src"), F.col("mn").alias("dst")
-        )
-        attach_self = mins2.select("src", F.col("mn").alias("dst"))
-        ss = (
-            attach_nb.unionAll(attach_self)
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # fixpoint: the round was an identity on the edge set
-        n_ss = ss.count()
-        same = n_ss == n_e and ss.subtract(e).limit(1).count() == 0
-        if prev_mat is not None:
-            prev_mat.unpersist()
-        prev_mat = ss
-        e = ss
-        n_e = n_ss
-        if same:
-            break
-    # stars read off as labels; roots label themselves
-    return (
-        e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
-        .unionAll(
-            e.select(
-                F.col("dst").alias("id"), F.col("dst").alias("component")
-            )
-        )
-        .distinct()
-    )
-
-
 def build_groups(
     identifier_edges: DataFrame,
     config: SubgraphConfig | None = None,
     clique_warn_size: int = 50,
-    algorithm: str = "label",
 ) -> DataFrame:
     """→ (id, group_id): every alias mapped to its clique's canonical id.
 
@@ -300,8 +199,7 @@ def build_groups(
         seeds = spark.createDataFrame(seed_pairs, ["src", "dst"])
         edges = edges.unionAll(seeds)
 
-    cc = connected_components_star if algorithm == "star" else connected_components
-    comps = cc(edges)
+    comps = connected_components(edges)
     canon = (
         comps.withColumn("score", id_score(F.col("id")))
         .groupBy("component")
@@ -319,7 +217,7 @@ def build_groups(
     n_big = oversized.limit(1).count()
     if n_big:
         # the reference's correctness canary (main.rs:131-133); stderr —
-        # stdout is reserved for the bench JSON contract
+        # stdout carries perfbench's JSON result
         print(
             f"WARNING: equivalence group(s) larger than {clique_warn_size} members detected",
             file=sys.stderr,

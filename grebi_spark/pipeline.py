@@ -43,54 +43,44 @@ def build_graph(
     ingested: list[DataFrame],
     config: SubgraphConfig,
     prefix_map: PrefixMap | None = None,
-    materialize: str = "checkpoint",
 ) -> BuiltGraph:
     """ingested: one long-form DataFrame per datasource (stage-01 outputs).
 
-    ``materialize`` controls the stage barriers (the reference has HARD
-    barriers: every Nextflow stage writes its output to disk before the
-    next starts — nextflow/01_create_subgraph.nf:14-70):
-
-    - ``"checkpoint"`` (default): eager ``localCheckpoint`` per stage.
-      Besides avoiding recompute, this TRUNCATES PLAN LINEAGE — without
-      it each stage's logical tree embeds every upstream stage's tree
-      (edges ⊃ merged ⊃ assigned ⊃ CC-loop ⊃ per-source melts), and
-      Catalyst re-analyses that combinatorially-growing tree on every
-      downstream action: planning time, not IO, becomes the bottleneck.
-      At cluster scale the blocks live on executor local storage
-      (memory then disk), the standard barrier for iterative/multi-stage
-      jobs; for restartability across job failures persist the built
-      state to durable parquet instead (incremental.save_state, or
-      sinks/bucketed.write_bucketed_graph for the co-located layout).
-    - ``"cache"``: lazy ``.cache()`` only — keeps full lineage (so a
-      lost partition can recompute from source), first consumer pays the
-      build. Right when only one output will be consumed.
+    Each stage ends at a barrier, as in the reference, where every
+    Nextflow stage writes its output to disk before the next starts
+    (nextflow/01_create_subgraph.nf:14-70): an eager
+    ``localCheckpoint``. Besides avoiding recompute, this TRUNCATES PLAN
+    LINEAGE — without it each stage's logical tree embeds every upstream
+    stage's tree (edges ⊃ merged ⊃ assigned ⊃ CC-loop ⊃ per-source
+    melts), and Catalyst re-analyses that combinatorially-growing tree
+    on every downstream action: planning time, not IO, becomes the
+    bottleneck. At cluster scale the blocks live on executor local
+    storage (memory then disk), the standard barrier for
+    iterative/multi-stage jobs; for restartability across job failures
+    persist the built state to durable parquet instead
+    (incremental.save_state).
     """
     if prefix_map:
         ingested = [normalise_prefixes(df, prefix_map) for df in ingested]
     all_rows = reduce(DataFrame.unionByName, ingested)
 
-    def _barrier(df: DataFrame) -> DataFrame:
-        if materialize == "checkpoint":
-            return df.localCheckpoint(eager=True)
-        return df.cache()
-
     # stage 02: identifiers → equivalence groups → id assignment
     identifiers = extract_identifiers(all_rows, config)
-    groups = _barrier(build_groups(identifier_pairs(identifiers), config))
+    groups = build_groups(identifier_pairs(identifiers), config)
+    groups = groups.localCheckpoint(eager=True)
     assigned = assign_ids(all_rows, groups, config)
     assigned = lift_types(assigned, config)
 
     # stage 03: merge
-    merged = _barrier(merge_nodes(assigned, config))
+    merged = merge_nodes(assigned, config).localCheckpoint(eager=True)
     nodes = node_table(merged)
 
     # stage 04: index
     index = build_index(merged)
-    meta = _barrier(index.metadata)
+    meta = index.metadata.localCheckpoint(eager=True)
 
     # stage 05: materialise
-    edges = _barrier(materialise_edges(merged, meta, config))
+    edges = materialise_edges(merged, meta, config).localCheckpoint(eager=True)
     dtypes = display_types(meta, index.type_counts)
     summary = edge_summary(edges, meta)
 

@@ -1,12 +1,13 @@
-"""Query surface.
+"""Query surface over a built graph.
 
-``relational`` — the generic operator inventory (joins incl. semi/anti,
-aggregation, top-k, distinct, set ops, JSON extraction) exercised on the
-harness star schema with DuckDB-oracle parity.
-``search``     — the Solr-semantics subset (weighted search, facets,
-autocomplete, edge pages; SURVEY.md §2.5 Q6–Q8).
-``closure``    — variable-length-path / transitive-closure utility (Q4).
-``parity``     — the graph pipeline itself (melt → merge → materialise →
-equivalence groups) run on relational inputs so the *pipeline operators*
-are oracle-checkable against plain SQL.
+``graph_queries`` — the reference's notebook/REST queries (pattern
+matches, IC scores, search with facets, edge pages, subgraphAll).
+``cypher`` / ``cypher_write`` — the Cypher subset the reference's
+queries/*.cypher and notebooks use, read and SET/DELETE.
+``closure``  — variable-length paths / transitive closure (Q4).
+``runner``   — stage 08: run a directory of query files.
+``parity``   — the pipeline itself (ingest → merge → materialise →
+equivalence groups, Cypher, KV, search, incremental verbs) run on the
+relational harness tables, so every operator is hash-checked against a
+plain-SQL DuckDB oracle.
 """

@@ -1,29 +1,14 @@
 """Q4 — transitive closure / variable-length paths.
 
 The reference delegates `[:R*1..]` to Neo4j (notebooks/ic_scores.ipynb:
-descendant counts → IC scores). Spark has no recursive CTE; the engine
-provides a bounded iterative expansion with two physical strategies:
-
-- ``doubling`` (default): path doubling — round k holds every pair
-  reachable in ≤ 2^k hops, so a depth-D graph converges in ⌈log2 D⌉
-  self-joins instead of D edge-joins. Each round is one shuffle join +
-  one distinct over the pair set; for closure-sized outputs (the pair
-  set must materialize anyway) this is strictly fewer round trips, and
-  round trips — not data volume — dominate iterative jobs at every
-  scale (each extra round is a full scheduling + shuffle barrier).
-- ``bfs``: frontier ⋈ edges per round — O(depth) rounds, but each
-  round only shuffles the newly discovered frontier. The right choice
-  when the closure is much larger than memory but the frontier is thin.
-- ``auto``: BFS for the first ``switch_depth`` rounds — a shallow
-  closure (the common huge-but-shallow case: enormous pair set, depth
-  2–4) finishes on cheap frontier joins without doubling ever
-  re-distincting the full pair set; if the frontier is still alive
-  after that, the accumulated paths seed path doubling, so a depth-D
-  graph still costs only switch_depth + ⌈log2(D/switch_depth)⌉ rounds.
-
-All strategies cut lineage with localCheckpoint so round N plans cost
-the same as round 1, and all terminate early on cyclic inputs (the
-pair set stops growing).
+descendant counts → IC scores). Here the closure is path doubling:
+round k holds every pair reachable in ≤ 2^k hops, so a depth-D graph
+converges in ⌈log2 D⌉ self-joins instead of D edge-joins. Each round is
+one shuffle join + one distinct over the pair set; round trips, not
+data volume, dominate iterative jobs (each extra round is a full
+scheduling + shuffle barrier). Every round cuts lineage with
+localCheckpoint, so round N plans cost the same as round 1, and the
+loop stops early on cyclic inputs (the pair set stops growing).
 """
 
 from __future__ import annotations
@@ -39,36 +24,19 @@ def transitive_closure(
     src: str = "src",
     dst: str = "dst",
     max_depth: int = 30,
-    method: str = "doubling",
 ) -> DataFrame:
     """All (ancestor, descendant) pairs reachable via 1..max_depth hops.
 
     ``edges`` rows are child→parent (src=child, dst=parent); output rows
     are (ancestor, descendant).
     """
-    e = edges.select(F.col(src).alias("child"), F.col(dst).alias("parent"))
-    if method == "doubling":
-        return _closure_doubling(e, max_depth)
-    if method == "auto":
-        return _closure_auto(e, max_depth)
-    return _closure_bfs(e, max_depth)
-
-
-def _closure_doubling(
-    e: DataFrame, max_depth: int, seed: DataFrame | None = None, reach: int = 1
-) -> DataFrame:
-    """``seed``/``reach``: start from a pair set already covering every
-    route of length <= reach (the auto strategy's BFS prefix)."""
     paths = (
-        seed
-        if seed is not None
-        else e.select(
-            F.col("child").alias("descendant"), F.col("parent").alias("ancestor")
-        )
+        edges.select(F.col(src).alias("descendant"), F.col(dst).alias("ancestor"))
         .distinct()
         .localCheckpoint()
     )
     n = paths.count()
+    reach = 1
     while reach < max_depth:
         step = paths.select(
             F.col("descendant").alias("__mid"), F.col("ancestor").alias("ancestor")
@@ -86,57 +54,6 @@ def _closure_doubling(
             return paths
         paths, n = grown, m
         reach *= 2
-    return paths
-
-
-def _closure_auto(e: DataFrame, max_depth: int, switch_depth: int = 4) -> DataFrame:
-    """BFS until ``switch_depth``; if the frontier survives, hand the
-    accumulated pair set to path doubling. Shallow closures never pay a
-    full-pair-set self-join + distinct; deep ones still converge in
-    logarithmic rounds."""
-    base = e.select(
-        F.col("child").alias("descendant"), F.col("parent").alias("ancestor")
-    ).distinct().localCheckpoint()
-    paths, frontier, depth = base, base, 1
-    while depth < min(switch_depth, max_depth):
-        nxt = (
-            frontier.join(e, frontier.ancestor == e.child)
-            .select("descendant", F.col("parent").alias("ancestor"))
-            .distinct()
-            .exceptAll(paths)
-            .localCheckpoint()
-        )
-        if nxt.limit(1).count() == 0:
-            return paths
-        paths = paths.unionAll(nxt).localCheckpoint()
-        frontier = nxt
-        depth += 1
-    if depth >= max_depth:
-        return paths
-    return _closure_doubling(e, max_depth, seed=paths, reach=depth)
-
-
-def _closure_bfs(e: DataFrame, max_depth: int) -> DataFrame:
-    # paths: (descendant, ancestor)
-    paths = e.select(F.col("child").alias("descendant"), F.col("parent").alias("ancestor"))
-    frontier = paths
-    for i in range(max_depth - 1):
-        nxt = (
-            frontier.join(e, frontier.ancestor == e.child)
-            .select("descendant", F.col("parent").alias("ancestor"))
-            .distinct()
-        )
-        # keep only newly discovered pairs (set difference ends the loop on
-        # cyclic graphs); the frontier is the only frame that needs
-        # materializing every round — paths only needs its lineage cut
-        # periodically, saving ~1 job per round
-        nxt = nxt.exceptAll(paths).localCheckpoint()
-        if nxt.limit(1).count() == 0:
-            break
-        paths = paths.unionAll(nxt)
-        if i % 4 == 3:
-            paths = paths.localCheckpoint()
-        frontier = nxt
     return paths
 
 
@@ -176,48 +93,9 @@ ORDER BY ancestor
 """
 
 
-
-def recursive_cte_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME descendant-count closure expressed as a RECURSIVE CTE
-    executed BY SPARK (recursive CTEs landed in Spark 4.x — the
-    analyst's declarative form runs unchanged, no imperative loop):
-    ``WITH RECURSIVE up AS (base UNION ALL step) ...`` — the engine
-    iterates to fixpoint. part_tree_descendant_counts is the hand-built
-    twin (path doubling / BFS under ``transitive_closure``); both share
-    the recursive DuckDB oracle, proving the three formulations agree.
-
-    Scale note: Spark executes each recursion step as a join against
-    the previous step's result (depth = tree height, ~log2(max key));
-    path doubling needs only ceil(log2(depth)) self-join rounds, which
-    is why the library operator keeps it for deep closures — this query
-    is the declarative-surface proof, not the scale path. Tree edges
-    are unique per node, so UNION ALL generates no duplicate pairs and
-    the recursion terminates at the root guard.
-    """
-    p = load_tables(spark, sf_dir, ("part",))["part"]
-    p.createOrReplaceTempView("_part_rcte")
-    return spark.sql(
-        """
-        WITH RECURSIVE up(descendant, ancestor) AS (
-          SELECT CAST(p_partkey AS BIGINT),
-                 CAST(p_partkey DIV 2 AS BIGINT)
-          FROM _part_rcte WHERE p_partkey >= 1
-          UNION ALL
-          SELECT u.descendant, CAST(u.ancestor DIV 2 AS BIGINT)
-          FROM up u WHERE u.ancestor >= 1
-        )
-        SELECT ancestor, count(DISTINCT descendant) AS n_descendants
-        FROM up WHERE ancestor < 8
-        GROUP BY ancestor ORDER BY ancestor
-        """
-    )
-
-
 QUERIES = {
     "part_tree_descendant_counts": part_tree_descendant_counts,
-    "recursive_cte_closure": recursive_cte_closure,
 }
 ORACLES = {
     "part_tree_descendant_counts": ORACLE_PART_TREE,
-    "recursive_cte_closure": ORACLE_PART_TREE,
 }

@@ -251,10 +251,8 @@ def run_cypher_mutation(
     items = [f"{var} AS node_id"] + list(
         v for v in refs.values()
     )
-    bare_alias = None
     if not refs and re.fullmatch(r"[A-Za-z_]\w*", residual):
         # bare WITH alias: read it straight through the planner
-        bare_alias = residual
         items.append(f"{residual} AS __value")
         residual = "__value"
     read_text = f"{prefix} RETURN {' , '.join(items)}"
@@ -262,28 +260,11 @@ def run_cypher_mutation(
     assigns = bound.select("node_id", F.expr(residual).alias("value"))
     new_graph = _set_property(graph, assigns, prop)
 
-    ret = re.search(r"\bRETURN\b", stripped[m.end():])
+    # the trailing RETURN is planned by the Cypher planner against the
+    # PRE-mutation graph over the same MATCH/WITH prefix (docstring above)
     result = None
-    if ret:
-        ret_items = stripped[m.end():][ret.end():].strip()
-        # The trailing RETURN is planned against the PRE-mutation graph
-        # over the same MATCH/WITH prefix (docstring above) — so when it
-        # only references the bare WITH alias the SET already bound, its
-        # rows are a pure function of `bound` and re-running the whole
-        # MATCH (for `SET ancestor.num_desc` that is the full var-length
-        # closure, the statement's dominant cost — guide §1.2: don't
-        # compute things twice) is redundant: evaluate the RETURN items
-        # over the bound rows directly. Anything this subset cannot
-        # express falls back to the second planner run.
-        if bare_alias is not None:
-            try:
-                result = bound.withColumnRenamed("__value", bare_alias).selectExpr(
-                    *[s.strip() for s in ret_items.split(",")]
-                )
-            except Exception:
-                result = None
-        if result is None:
-            result = run_cypher(graph, prefix + " " + stripped[m.end():].strip())
+    if re.search(r"\bRETURN\b", stripped[m.end():]):
+        result = run_cypher(graph, prefix + " " + stripped[m.end():].strip())
     return MutationResult(graph=new_graph, result=result)
 
 

@@ -180,30 +180,12 @@ SELECT * FROM (
 """
 
 
-# the high-value equivalence EDGE LIST is shared by both CC-algorithm
-# variants (label-propagation and large/small-star run over the SAME
-# graph by contract) — one events scan + json-extract + distinct per
-# session instead of one per variant; checkpointed like every other
-# stage artifact so it survives the bench's per-query clearCache()
-_EQUIV_PAIRS_CACHE: dict[str, DataFrame] = {}
-
-
 def _equiv_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if key in _EQUIV_PAIRS_CACHE:
-        return _EQUIV_PAIRS_CACHE[key]
     e = load_tables(spark, sf_dir, ("events",))["events"]
-    pairs = (
-        e.filter(F.col("value") > 180)
-        .select(
-            F.concat(F.lit("u:"), F.col("user_id").cast("string")).alias("src"),
-            F.concat(F.lit("k:"), F.get_json_object("props", "$.k")).alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    _EQUIV_PAIRS_CACHE[key] = pairs
-    return pairs
+    return e.filter(F.col("value") > 180).select(
+        F.concat(F.lit("u:"), F.col("user_id").cast("string")).alias("src"),
+        F.concat(F.lit("k:"), F.get_json_object("props", "$.k")).alias("dst"),
+    ).distinct()
 
 
 def equivalence_groups_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,18 +195,6 @@ def equivalence_groups_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     group's canonical id. Oracle: recursive-CTE reachability + the same
     readability score in SQL."""
     groups = build_groups(_equiv_pairs(spark, sf_dir), None)
-    return groups.orderBy("id")
-
-
-def equivalence_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME equivalence grouping computed by the alternating
-    large-star/small-star algorithm (Kiveris et al., SoCC'14 —
-    ``operators.groups.connected_components_star``): the
-    high-diameter-safe alternative that contracts the GRAPH instead of
-    propagating labels, converging in O(log² n) rounds on any topology.
-    Shares ``equivalence_groups_events``'s oracle — the two algorithms
-    are result-interchangeable, proven per run."""
-    groups = build_groups(_equiv_pairs(spark, sf_dir), None, algorithm="star")
     return groups.orderBy("id")
 
 
@@ -481,8 +451,8 @@ def cypher_star_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign → merge → materialise → Cypher parse → plan → execute.
 
     (The full translator runs the reference's own queries/*.cypher in
-    tests/test_cypher.py; this entry puts one end-to-end path on the
-    driver's correctness board.)
+    tests/test_cypher.py; this entry puts one end-to-end path in the
+    oracle suite.)
 
     Scale shape: each Cypher hop compiles to an edge-filter equi-join
     against the node table (Q1's mapping in SURVEY §2.5) — the same
@@ -512,7 +482,7 @@ ORDER BY n_customers DESC, region
 
 
 def cypher_filter_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A second verbatim Cypher on the driver's board, exercising the
+    """A second verbatim Cypher in the oracle suite, exercising the
     WHERE translation the first one doesn't: membership over a
     multi-valued property (``"lit" IN v.`prop``` — the
     queries/mouse_phenotypes_by_system.cypher:2 predicate shape) plus a
@@ -541,7 +511,7 @@ ORDER BY nation
 
 
 def cypher_set_ic_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cypher MUTATIONS on the driver's board — the ic_scores notebook
+    """Cypher MUTATIONS in the oracle suite — the ic_scores notebook
     write-back flow (notebooks/ic_scores.ipynb:36-63) executed for real
     against the built star graph: (1) ``SET ancestor.num_desc`` from a
     var-length-closure WITH aggregate, (2) ``SET cl.ic = 1.0 -
@@ -622,7 +592,7 @@ ORDER BY node_id
 def _bio_graph_long(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     """Melt region/nation/customer into the BIOMEDICAL long form the
     reference's remaining two queries/*.cypher expect — so their
-    VERBATIM texts run on the driver's board against sf data:
+    VERBATIM texts run in the oracle suite against sf data:
 
     - disease per region (``biolink:Disease``, id ``mondo:000504<r>`` —
       region 4 yields the queries' literal anchor ``mondo:0005044``)
@@ -800,7 +770,7 @@ def _kv_store(spark: SparkSession, sf_dir: str) -> str:
 
 
 def kv_edge_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K6's EDGE half on the driver's board: every nation→region edge
+    """K6's EDGE half in the oracle suite: every nation→region edge
     of the built star graph, resolved BY EDGE ID through the executed
     sqlite KV store (distributed shard load → compaction → pure point-
     read multiGet, sinks/kv.py) and returned from the STORED JSON —
@@ -843,7 +813,7 @@ ORDER BY from_id
 
 
 def edge_page_outgoing_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q8's OUTGOING half on the driver's board (GrebiApi.java:129-176
+    """Q8's OUTGOING half in the oracle suite (GrebiApi.java:129-176
     — the /nodes/{id}/outgoing_edges endpoint the HTTP facade serves):
     page 0 of nation n:3's outgoing edges over the BUILT star graph,
     hydrated with the target node's header. Deterministic paging: total
@@ -873,7 +843,7 @@ LIMIT 10
 
 
 def graph_search_negative(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q6's NEGATIVE-FILTER semantics on the board (GrebiSolrQuery.java:
+    """Q6's NEGATIVE-FILTER semantics in the oracle suite (GrebiSolrQuery.java:
     118-121's ``-field:(...)`` filter + GrebiApi.java:198's always-on
     obsolete exclusion): search the built star graph for id-substring
     'c:11', excluding two market segments (OR within the negated
@@ -1830,7 +1800,6 @@ QUERIES = {
     "graph_merge_nodes": graph_merge_nodes,
     "graph_edges_fk": graph_edges_fk,
     "equivalence_groups_events": equivalence_groups_events,
-    "equivalence_groups_star": equivalence_groups_star,
     "tsv_ingest_roundtrip": tsv_ingest_roundtrip,
     "jsonl_ingest_roundtrip": jsonl_ingest_roundtrip,
     "neo4j_nodes_pivot": neo4j_nodes_pivot,
@@ -1865,7 +1834,6 @@ ORACLES = {
     "graph_merge_nodes": ORACLE_MERGE_NODES,
     "graph_edges_fk": ORACLE_EDGES_FK,
     "equivalence_groups_events": ORACLE_EQUIV_GROUPS,
-    "equivalence_groups_star": ORACLE_EQUIV_GROUPS,
     "tsv_ingest_roundtrip": ORACLE_TSV_ROUNDTRIP,
     "jsonl_ingest_roundtrip": ORACLE_JSONL_ROUNDTRIP,
     "neo4j_nodes_pivot": ORACLE_NEO4J_PIVOT,

@@ -14,6 +14,16 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+# share of physical RAM the driver heap gets when SPARK_DRIVER_MEMORY is
+# unset: local mode runs every executor inside this one JVM, and the
+# Python workers and the OS page cache need the other half
+_DRIVER_MEMORY_SHARE = 0.5
+
+
+def _default_driver_memory() -> str:
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{int(phys * _DRIVER_MEMORY_SHARE) // (1 << 20)}m"
+
 
 def get_spark(
     app_name: str = "grebi_spark",
@@ -23,11 +33,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Defaults come from the environment the driver harness sets:
-    ``SPARK_GRAFT_CPUS`` threads on local mode. On a real cluster you
-    would pass ``master=None`` and let spark-submit supply it.
+    ``SPARK_GRAFT_CPUS`` sets the local-mode thread count and
+    ``SPARK_DRIVER_MEMORY`` the driver heap. Unset, they default to the
+    CPUs this process may run on and to half of physical RAM, so a
+    session never asks for more than the machine has. On a real cluster
+    spark-submit supplies the master instead.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     # Make this package importable in executor Python workers regardless of
     # the driver script's cwd (cluster equivalent: ship a wheel via
@@ -45,20 +57,19 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # coalescePartitions.parallelismFirst stays at its default (true):
-        # an A/B measured `false` (the byte-targeting mode) faster on 8/10
-        # shuffle-light queries, but it coalesces the CPU-dense stages —
-        # Python decode (multimodal_*, python_datasource_*), shingle
-        # containment, the walk-step joins — down to ONE post-shuffle
-        # partition at bench scale (stages visibly ran 1/1 vs 16/32),
-        # serializing exactly the work that needs the cores. Bytes are the
-        # wrong cost proxy for those stages at any scale, so the
-        # parallelism-preserving default is the deliberate choice.
+        # the byte-targeting mode was measured to coalesce CPU-dense
+        # stages (Python UDF parsing, iterative join rounds) down to ONE
+        # post-shuffle partition on small inputs, serializing exactly
+        # the work that needs the cores.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow batches for the (rare) Pandas-UDF path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the harness events table stores TIMESTAMP(NANOS) which the Spark
@@ -86,61 +97,6 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def bounded_drain_conf(
-    spark: SparkSession,
-    state_partitions: int | None = None,
-    no_data_batches: bool = False,
-):
-    """Session conf for a bounded availableNow drain, restored on exit:
-    right-size the state-store partition count to the drain's key
-    cardinality, and skip the trailing EMPTY micro-batch availableNow
-    appends for watermark-only progress — every bounded drain in this
-    engine that needs watermark-driven emission gets it from a REAL
-    sentinel batch (see streaming.ops._run_to_memory_sink), so the
-    empty batch re-runs the stateful pipeline to emit nothing. Callers
-    whose sinks DO rely on the trailing batch pass
-    ``no_data_batches=True``."""
-    saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    saved_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled",
-            "true" if no_data_batches else "false",
-        )
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", saved_ndb)
-
-
-# --- per-session scratch space ----------------------------------------------
-
-_SCRATCH_ROOT: str | None = None
-
-
-def scratch_dir(prefix: str = "grebi_") -> str:
-    """A temp directory under ONE per-process scratch root that is
-    removed at interpreter exit. Every staging site (datasource
-    roundtrips, streaming checkpoints, shard writes) allocates through
-    here so repeated bench/soak runs can't accumulate orphaned
-    grebi_* dirs in /tmp for the life of the machine."""
-    global _SCRATCH_ROOT
-    import atexit
-    import shutil
-    import tempfile
-
-    if _SCRATCH_ROOT is None:
-        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="grebi_scratch_")
-        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 def ensure_package_on_workers(spark: SparkSession) -> None:
     """Make ``grebi_spark`` importable in executor Python workers of ANY
@@ -181,7 +137,7 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
 
 # Lazy DataFrame HANDLES per (session, table path, mtime) — a handle is a
 # logical plan, not data: every execution through it still scans parquet,
-# so bench runs stay compute-honest (nothing is cached across the timed
+# so timed runs stay compute-honest (nothing is cached across the timed
 # region). What the memo saves is the per-call driver work of
 # spark.read.parquet — py4j round trips, file listing, footer/schema read
 # — which measured ~0.10-0.14 s per table per call and is paid by nearly

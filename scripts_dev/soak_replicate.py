@@ -34,8 +34,8 @@ def main() -> None:
     names = sys.argv[2:]
     spark = get_spark("soak", shuffle_partitions=32)
     # SOAK_KEEP_DIR: build the replicated corpus at a persistent path and
-    # keep it — the full-board soak then runs `SPARK_GRAFT_SF_DIR=<dir>
-    # python bench.py` against it
+    # keep it, so later soaks (scripts_dev/check_query.py --sf <dir>) can
+    # reuse it
     keep = os.environ.get("SOAK_KEEP_DIR")
     out = keep or tempfile.mkdtemp(prefix=f"grebi_soak_{n}x_")
     if keep:

@@ -371,6 +371,21 @@ def test_ic_scores_set_flow(graph):  # noqa: F811
     )
 
 
+def test_mutation_return_is_planned_as_cypher(graph):  # noqa: F811
+    """The RETURN after a SET goes through the Cypher planner, never
+    through Spark SQL over the bound rows: `+` on a string is not in the
+    supported Cypher subset, so the statement is rejected instead of
+    Spark SQL silently casting the string to a number."""
+    from grebi_spark.plans.cypher_write import run_cypher_mutation
+
+    stmt = IC_SET_NUM_DESC.replace(
+        "RETURN max(num_desc) AS max_num_desc",
+        "RETURN num_desc + 'descendants' AS label",
+    )
+    with pytest.raises(ValueError, match="unsupported cypher expression"):
+        run_cypher_mutation(graph, stmt)
+
+
 def test_ic_scores_delete_flow(graph):  # noqa: F811
     """The notebook's final pruning cell: low-ic classes and every edge
     touching them are removed; CALL-IN-TRANSACTIONS batching is noise."""

@@ -139,22 +139,3 @@ def test_run_cypher_files(spark, tmp_path):
         open(f).read() for f in glob.glob(str(out / "names" / "*.csv"))
     )
     assert "Alpha" in content and "b:2" in content
-
-
-def test_skip_reason_surfaces_tws_exactly_when_protobuf_absent():
-    """The protobuf-gated registration: events_tws_running_stats is
-    either a live queries() entry (protobuf importable) or a skipped()
-    entry carrying the reason — exactly one of the two, never silently
-    absent from both."""
-    import __spark_entry__ as entry
-    from grebi_spark.streaming.ops import _has_protobuf
-
-    qs = entry.queries()
-    sk = entry.skipped()
-    if _has_protobuf():
-        assert "events_tws_running_stats" in qs
-        assert "events_tws_running_stats" not in sk
-        assert "events_tws_running_stats" in entry.oracle_sql()
-    else:
-        assert "events_tws_running_stats" not in qs
-        assert "protobuf" in sk["events_tws_running_stats"]

@@ -83,6 +83,44 @@ def test_suggest_and_resolve(server):
     assert rows[0]["node_id"] and rows[0]["properties"]
 
 
+@pytest.mark.parametrize(
+    "route",
+    ["search?q=hyper&", "nodes/mondo:0005044/incoming_edges?",
+     "nodes/mondo:0005044/outgoing_edges?"],
+)
+@pytest.mark.parametrize("param", ["page=abc", "size=1.5", "page=-1", "size=-3"])
+def test_bad_paging_is_a_400(server, route, param):
+    st, body = _get(server, f"/api/v1/subgraphs/main/{route}{param}")
+    assert st == 400 and "non-negative integer" in body["error"]
+
+
+def test_page_size_is_capped(server, monkeypatch):
+    import grebi_spark.api.http_api as api
+
+    assert api.MAX_PAGE_SIZE >= 10  # perfbench asks for 10-row pages
+    st, body = _get(server, "/api/v1/subgraphs/main/search?q=e&size=2147483647&page=3")
+    assert st == 200
+    monkeypatch.setattr(api, "MAX_PAGE_SIZE", 1)
+    st, body = _get(
+        server, "/api/v1/subgraphs/main/nodes/mondo:0005044/incoming_edges?size=5"
+    )
+    assert st == 200 and body["numElements"] == 1
+    st, body = _get(server, "/api/v1/subgraphs/main/search?q=e&size=5")
+    assert st == 200 and body["numElements"] == 1
+
+
+def test_server_error_does_not_echo_exception_text(server, monkeypatch, capfd):
+    import grebi_spark.api.http_api as api
+
+    def boom(graph):
+        raise RuntimeError("secret /internal/path detail")
+
+    monkeypatch.setattr(api, "graph_stats", boom)
+    st, body = _get(server, "/api/v1/stats")
+    assert st == 500 and body == {"error": "internal server error"}
+    assert "secret /internal/path detail" in capfd.readouterr().err
+
+
 def test_unknown_routes(server):
     st, _ = _get(server, "/api/v1/bogus")
     assert st == 404

@@ -107,95 +107,6 @@ def test_merge_invariants(spark, rows):
         assert r["datasources"] == expected
 
 
-def _naive_jaccard_pairs(spark, sf_dir):
-    """All-pairs exact Jaccard >= 0.5 — the unblocked reference result."""
-    from pyspark.sql import functions as F
-
-    from grebi_spark.functions.dedup import JACCARD_T, word_shingles
-    from grebi_spark.session import load_tables
-
-    d = load_tables(spark, sf_dir, ("documents",))["documents"]
-    sh = d.select("doc_id", F.explode(word_shingles(F.col("text"))).alias("sh"))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    pairs = (
-        sh.alias("a")
-        .join(sh.alias("b"), "sh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("shared"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    return {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in (
-            pairs.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .withColumn(
-                "jaccard",
-                F.round(F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 4),
-            )
-            .filter(F.col("jaccard") >= JACCARD_T)
-            .select("doc_a", "doc_b", "jaccard")
-            .collect()
-        )
-    }
-
-
-def test_prefix_filtering_is_exact_complete(spark, sf_dir):
-    """dedup_ngram_jaccard's AllPairs prefix blocking must lose no pair:
-    its result equals the unblocked all-pairs computation."""
-    from grebi_spark.functions.dedup import dedup_ngram_jaccard
-
-    got = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup_ngram_jaccard(spark, sf_dir).collect()
-    }
-    assert got == _naive_jaccard_pairs(spark, sf_dir)
-
-
-def test_srp_banding_subset_and_recall(spark, sf_dir):
-    """dedup_embedding_cosine (banded SRP blocking) must be a subset of
-    the exact all-pairs result, with high recall on the fixture corpus."""
-    from pyspark.sql import functions as F
-
-    from grebi_spark.functions.dedup import (
-        COSINE_T,
-        dedup_embedding_cosine,
-        planted_vectors,
-    )
-    from grebi_spark.session import load_tables
-
-    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    e2 = planted_vectors(e)
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    a = e2.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
-    b = e2.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-    exact = {
-        (r["vec_a"], r["vec_b"])
-        for r in (
-            a.crossJoin(b)
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .withColumn(
-                "cosine",
-                dot(F.col("va"), F.col("vb"))
-                / (F.sqrt(dot(F.col("va"), F.col("va"))) * F.sqrt(dot(F.col("vb"), F.col("vb")))),
-            )
-            .filter(F.col("cosine") >= COSINE_T)
-            .select("vec_a", "vec_b")
-            .collect()
-        )
-    }
-    banded = {
-        (r["vec_a"], r["vec_b"]) for r in dedup_embedding_cosine(spark, sf_dir).collect()
-    }
-    assert banded <= exact
-    if exact:
-        assert len(banded) / len(exact) >= 0.8
-
-
 # --- Turtle parser round-trip (sources/rdf_convert.py) ----------------------
 
 _LIT = st.text(
@@ -246,92 +157,6 @@ def test_turtle_roundtrip(triples):
         lines.append(f"<{base}{s}> <{base}{p}> {obj} .")
     got = turtle_to_triples("\n".join(lines))
     assert sorted(got) == sorted(want)
-
-
-def test_edjoin_positional_prefix_blocking_complete():
-    """Pure-Python stress proof of fuzzy_title_pairs' blocking theory
-    (dedup.py:_FUZZY_PREFIX_GRAMS): for thousands of adversarial string
-    pairs within edit distance d — tiny alphabets, insert/delete
-    position shifts — the rarest-first positional q-gram prefixes of
-    length q*d+1 always share a gram with |Δpos| <= d. A miss here
-    would mean the Spark operator can silently drop a qualifying pair
-    (today only the per-run oracle would catch it)."""
-    import random
-
-    Q, D = 4, 3
-    PREFIX = Q * D + 1
-
-    def lev(a, b):
-        m, n = len(a), len(b)
-        dp = list(range(n + 1))
-        for i in range(1, m + 1):
-            prev = dp[0]
-            dp[0] = i
-            for j in range(1, n + 1):
-                cur = dp[j]
-                dp[j] = min(dp[j] + 1, dp[j - 1] + 1, prev + (a[i - 1] != b[j - 1]))
-                prev = cur
-        return dp[n]
-
-    def grams(s):
-        return [(i, s[i : i + Q]) for i in range(len(s) - Q + 1)]
-
-    def blocked(sa, sb, df):
-        pa = sorted(grams(sa), key=lambda pg: (df.get(pg[1], 0), pg[1], pg[0]))[:PREFIX]
-        pb = sorted(grams(sb), key=lambda pg: (df.get(pg[1], 0), pg[1], pg[0]))[:PREFIX]
-        return any(
-            ga == gb and abs(ia - ib) <= D
-            for ia, ga in pa
-            for ib, gb in pb
-        )
-
-    rng = random.Random(7)
-    trials = 0
-    for _ in range(1500):
-        n = rng.randint(16, 24)
-        alpha = rng.choice(["ab", "abc", "abcdefgh"])
-        s = "".join(rng.choice(alpha) for _ in range(n))
-        t = list(s)
-        for _ in range(rng.randint(0, D)):
-            op = rng.choice("sid")
-            i = rng.randrange(len(t)) if t else 0
-            if op == "s":
-                t[i] = rng.choice(alpha)
-            elif op == "i":
-                t.insert(i, rng.choice(alpha))
-            elif len(t) > 16:
-                del t[i]
-        t = "".join(t)
-        if lev(s, t) > D or len(t) < 16:
-            continue
-        trials += 1
-        corpus = [s, t] + [
-            "".join(rng.choice(alpha) for _ in range(n)) for _ in range(6)
-        ]
-        df = {}
-        for c in corpus:
-            for _, g in set(grams(c)):
-                df[g] = df.get(g, 0) + 1
-        assert blocked(s, t, df), (s, t)
-    assert trials > 500  # the generator actually produced in-threshold pairs
-
-
-def test_assign_vectorized_matches_expression(spark, sf_dir):
-    """The large-K NumPy assignment path must be BIT-identical to the
-    literal-struct expression path (sequential per-dim accumulation +
-    HALF_UP 1e-6 round in both), so derived-K runs stay oracle-exact."""
-    import grebi_spark.functions.training as tr
-
-    a = [tuple(r) for r in tr.kmeans_embeddings(spark, sf_dir).collect()]
-    tr._CENT_CACHE.clear()
-    old = tr._ASSIGN_VEC_MIN_K
-    try:
-        tr._ASSIGN_VEC_MIN_K = 1  # force the NumPy path
-        b = [tuple(r) for r in tr.kmeans_embeddings(spark, sf_dir).collect()]
-    finally:
-        tr._ASSIGN_VEC_MIN_K = old
-        tr._CENT_CACHE.clear()
-    assert a == b
 
 
 @given(

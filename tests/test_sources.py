@@ -576,23 +576,6 @@ def test_stream_reader_legacy_offset_migration(tmp_path):
     assert 99 not in [r[0] for r in rows2]  # documented first_n hazard
 
 
-def test_half_up_negative_matches_oracle():
-    """half_up/half_up_np round half AWAY FROM ZERO for negatives,
-    matching F.round / DuckDB round (ties like -0.1234565 must not
-    round toward +inf)."""
-    import numpy as np
-
-    from grebi_spark.functions.num import half_up, half_up_np
-
-    assert half_up(0.1234565) == 0.123457  # was already half-up for x>=0
-    assert half_up(-2.5, 0) == -3.0
-    assert half_up(-0.0000005) == -0.000001
-    arr = half_up_np(np.array([2.5, -2.5, 1.15, -1.15]), 0)
-    assert list(arr) == [3.0, -3.0, 1.0, -1.0]
-    arr6 = half_up_np(np.array([-0.0000005, 0.0000005]))
-    assert list(arr6) == [-0.000001, 0.000001]
-
-
 def test_stream_offset_retention_property(tmp_path):
     """Offset retention under ARBITRARY arrival schedules (reader-level,
     hypothesis): land batches of files, read+commit each under

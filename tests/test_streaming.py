@@ -1,210 +1,9 @@
-"""Structured Streaming tests: streaming ingest to long form, windowed
-counts, watermarked dedup (all via availableNow + memory sink)."""
+"""Stream-maintenance tests: a ``grebi_jsonl`` stream drained with
+availableNow into ``foreachBatch`` folds each landed dump exactly once,
+and per-file maintenance verbs leave the graph value-identical to the
+same batch verbs."""
 
-import json
-
-import pytest
 from pyspark.sql import functions as F
-
-from grebi_spark.sources.jsonl import JsonlTransform
-from grebi_spark.streaming import (
-    stream_jsonl_nodes,
-    streaming_dedup,
-    windowed_event_counts,
-)
-from grebi_spark.streaming.ops import batch_session_windows
-
-
-def _run_stream(df, name, mode="append"):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
-
-
-def test_stream_jsonl_ingest(spark, tmp_path):
-    d = tmp_path / "in"
-    d.mkdir()
-    (d / "a.jsonl").write_text(
-        json.dumps({"id": "x:1", "name": "one", "grebi:type": "T"})
-        + "\n"
-        + json.dumps({"id": "x:2", "name": "two", "grebi:type": "T"})
-        + "\n"
-    )
-    stream = stream_jsonl_nodes(
-        spark, str(d), "streamsrc", transform=JsonlTransform(key_prefix="s:")
-    )
-    assert stream.isStreaming
-    _run_stream(stream, "ingested_stream")
-    rows = spark.sql("select * from ingested_stream").collect()
-    vals = {(r["entity_id"], r["prop_key"], r["value"]) for r in rows}
-    assert ("x:1", "s:name", "one") in vals
-    assert ("x:2", "grebi:type", "T") in vals
-
-
-def test_windowed_counts_and_dedup(spark, tmp_path):
-    d = tmp_path / "ev"
-    d.mkdir()
-    rows = [
-        {"ts": "2024-01-01T00:05:00", "event_type": "click", "user_id": 1, "value": 1.0},
-        {"ts": "2024-01-01T00:10:00", "event_type": "click", "user_id": 1, "value": 2.0},
-        {"ts": "2024-01-01T01:10:00", "event_type": "view", "user_id": 2, "value": 3.0},
-        # duplicate of row 1
-        {"ts": "2024-01-01T00:05:00", "event_type": "click", "user_id": 1, "value": 1.0},
-    ]
-    (d / "e.jsonl").write_text("\n".join(json.dumps(r) for r in rows))
-    schema = "ts timestamp, event_type string, user_id long, value double"
-    stream = spark.readStream.schema(schema).json(str(d))
-
-    counts = windowed_event_counts(stream)
-    # complete mode: a finite availableNow stream never advances the
-    # watermark past the last window, so append would emit nothing
-    _run_stream(
-        counts.select("window_start", "event_type", "n_events"), "win_counts", "complete"
-    )
-    got = {
-        (str(r["window_start"]), r["event_type"]): r["n_events"]
-        for r in spark.sql("select * from win_counts").collect()
-    }
-    assert got[("2024-01-01 00:00:00", "click")] == 3
-    assert got[("2024-01-01 01:00:00", "view")] == 1
-
-    dedup = streaming_dedup(stream, ("user_id", "ts", "event_type"))
-    _run_stream(dedup, "dedup_stream")
-    assert spark.sql("select * from dedup_stream").count() == 3
-
-
-def test_batch_session_windows(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "2024-01-01 00:00:00"),
-            (1, "2024-01-01 00:10:00"),
-            (1, "2024-01-01 02:00:00"),
-            (2, "2024-01-01 00:00:00"),
-        ],
-        ["user_id", "ts_str"],
-    ).select("user_id", F.col("ts_str").cast("timestamp").alias("ts"))
-    out = batch_session_windows(df).collect()
-    per_user = {}
-    for r in out:
-        per_user.setdefault(r["user_id"], []).append(r["n_events"])
-    assert sorted(per_user[1]) == [1, 2]  # two sessions: gap > 30 min
-    assert per_user[2] == [1]
-
-
-def test_events_hourly_stream_matches_batch(spark):
-    """The streaming rollup (availableNow over the events table) must
-    produce exactly the batch rollup's rows — same plan, incremental
-    execution."""
-    from grebi_spark.plans.temporal import events_hourly
-    from grebi_spark.streaming.ops import events_hourly_stream
-
-    sf = "/root/testdata/sf0.001"
-    got = [tuple(r) for r in events_hourly_stream(spark, sf).collect()]
-    want = [tuple(r) for r in events_hourly(spark, sf).collect()]
-    assert got == want
-
-
-def test_foreachbatch_partition_overwrite_is_idempotent(spark, tmp_path):
-    """The foreachBatch sink contract: re-delivering the SAME batch id
-    (what happens on recovery after a crash between sink write and
-    checkpoint commit) must rewrite that batch's partition, not append
-    a second copy."""
-    from pyspark.sql import functions as F
-
-    out = str(tmp_path / "sink")
-    df = spark.range(10).withColumn("v", F.col("id") * 2)
-
-    def write_batch(batch_df, batch_id):
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
-
-    write_batch(df, 0)
-    write_batch(df, 0)  # replay of the same batch
-    write_batch(df.withColumn("id", F.col("id") + 100), 1)
-    back = spark.read.parquet(out)
-    assert back.count() == 20  # 10 per batch — no duplication from replay
-    assert back.filter("batch_id = 0").count() == 10
-
-
-def test_rocksdb_state_store_same_results(spark):
-    """The 100 TB state path: the RocksDB state store provider keeps
-    streaming state on disk instead of the executor heap (the default
-    HDFSBackedStateStoreProvider holds every key in memory — the thing
-    that OOMs at production key cardinality). The provider is a
-    pluggable conf; results must be identical."""
-    from grebi_spark.streaming.ops import events_dedup_stream
-
-    sf = "/root/testdata/sf0.001"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    default = [tuple(r) for r in events_dedup_stream(spark, sf).collect()]
-    old = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, rocks)
-        got = [tuple(r) for r in events_dedup_stream(spark, sf).collect()]
-    finally:
-        if old:
-            spark.conf.set(key, old)
-        else:
-            spark.conf.unset(key)
-    assert got == default and len(got) > 0
-
-
-def test_statestore_reader_matches_batch(spark, sf_dir):
-    """The statestore batch source reads back exactly the per-key state
-    a drained complete-mode aggregate persisted."""
-    from grebi_spark.streaming.ops import statestore_read_check
-
-    got = {
-        r["event_type"]: r["n_events"]
-        for r in statestore_read_check(spark, sf_dir).collect()
-    }
-    want = {
-        r["event_type"]: r["n"]
-        for r in spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_transform_with_state_running_stats(spark, sf_dir):
-    """transformWithState running stats == batch aggregate (skips where
-    the protobuf runtime the state-server protocol needs is absent)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's state-server protocol requires "
-        "google.protobuf, which this container lacks (no network "
-        "installs); the operator registers itself automatically where "
-        "protobuf exists — see streaming/ops.py:_has_protobuf",
-    )
-    from grebi_spark.streaming.ops import events_tws_running_stats
-
-    got = events_tws_running_stats(spark, sf_dir)
-    want = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy(F.col("user_id").cast("long").alias("user_id"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)")).alias("sum_cents"),
-        )
-    )
-    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
 
 
 def test_stream_checkpoint_restart_folds_only_new_files(spark, tmp_path):
@@ -212,7 +11,7 @@ def test_stream_checkpoint_restart_folds_only_new_files(spark, tmp_path):
     graph_maintenance_stream): draining a grebi_jsonl stream TWICE
     against one checkpoint must fold each dump exactly once — the
     restarted job resumes from the committed offset and sees ONLY the
-    files that landed since. (The board query's oracle hash proves the
+    files that landed since. (The parity query's oracle hash proves the
     no-LOSS half; the merge's (key,value,datasource) dedup would absorb
     a duplicate fold, so no-DUPLICATE needs this direct check.)"""
     import json
@@ -388,28 +187,3 @@ def test_parse_verb_file_rejects_unknown_verbs():
     assert _parse_verb_file("remove__crm.jsonl") == ("remove", "crm")
     with pytest.raises(ValueError, match="unknown maintenance verb"):
         _parse_verb_file("004_rename__crm.jsonl")
-
-
-def test_dedup_probe_stream_catches_cross_wave_duplicates(spark):
-    """The arrival-order contract of docs_dedup_probe_stream: a wave-2
-    arrival (doc_id % 10 = 5) whose near-dup is a WAVE-1 arrival — not
-    a corpus doc — must still be flagged, because wave 1's band keys
-    were appended to the stored index before wave 2 probed it. At
-    sf0.001 doc 5 ~ doc 450 is such a pair by construction of the
-    fixture corpus; a corpus-only probe (dedup_incremental_probe's
-    contract) cannot see it."""
-    from grebi_spark.functions.dedup import dedup_incremental_probe
-    from grebi_spark.streaming.ops import docs_dedup_probe_stream
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        (r["new_doc"], r["dup_of"]): r["jacc_pct"]
-        for r in docs_dedup_probe_stream(spark, sf).collect()
-    }
-    assert got[(5, 450)] == 97  # wave-2 vs wave-1 — the streaming catch
-    batch_only = {
-        (r["new_doc"], r["dup_of"])
-        for r in dedup_incremental_probe(spark, sf).collect()
-    }
-    assert (5, 450) not in batch_only  # invisible to the corpus-only probe
-    assert batch_only <= set(got)  # everything the batch probe sees, plus
