@@ -18,131 +18,36 @@ Route parity (reference file:line):
 ``GET /api/v1/subgraphs/{s}/summary``                     GrebiSummarySvc:23-38
 ========================================================  =============
 
-Scope note: the reference serves these from Solr/Neo4j/RocksDB builds;
-this facade serves them from the engine's artifacts where an executed
-store exists — /search and /suggest read the MAINTAINED segment/
-tombstone search core when one is configured (``solr_cores``, matching
-GrebiApi's Solr-backed read path), /resolve and edge hydration read the
-executed sqlite KV (``kv_stores``, the resolver-service shape) — and
-falls back to the built DataFrames otherwise (the correct shape for an
-analytics cluster's driver-side endpoint: each request runs a bounded
-Spark job with page-sized limits and broadcast-probe lookups). The
-HANDLER semantics — scoring, paging, facets, hydration — are the same
-engine functions either way, suite-asserted value-identical.
+Scope note: like the reference, which serves from its RocksDB and Solr
+builds and never from the ETL engine, every store-backed route reads
+the subgraph's built stores with plain sqlite reads — no Spark job runs
+on the request path. Node pages, edge pages and /resolve read the KV
+store (``sinks.kv.build_kv_store``); /search (boost ladder or
+``rank=bm25``) and /suggest read the MAINTAINED search core
+(``sinks.solr_jsonl.build_solr_core`` / ``refresh_solr_core``), so a
+maintenance fold shows on the next request. Each route has that one
+read path; the frame implementations in ``plans.graph_queries`` are the
+oracles the suite checks the stores against. /stats, /collections and
+the summary routes aggregate the built frames.
 
 Stdlib-only by design (http.server + ThreadingHTTPServer): the
-container has no web framework, and the surface is nine GET routes.
+container has no web framework, and the surface is a dozen GET routes.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import threading
 import traceback
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
-from pyspark.sql import functions as F
-
 from ..pipeline import BuiltGraph
-from ..plans.graph_queries import (
-    graph_stats,
-    incoming_edges,
-    search_nodes,
-)
-
-
-def outgoing_edges(
-    graph: BuiltGraph, node_id: str, page: int = 0, size: int = 20,
-    edge_type: str | None = None,
-):
-    """Q8 mirror of incoming_edges (GrebiApi.java:129-176): the edges
-    FROM a node, hydrated with the target node's header."""
-    e = graph.edges.filter(F.col("from_id") == node_id)
-    if edge_type:
-        e = e.filter(F.col("edge_type") == edge_type)
-    to_meta = graph.nodes.select(
-        F.col("node_id").alias("to_id"),
-        F.col("names").alias("to_names"),
-        F.col("types").alias("to_types"),
-    )
-    return (
-        e.join(to_meta, "to_id", "left")
-        .select("edge_id", "edge_type", "to_id", "to_names", "to_types", "datasources")
-        .orderBy("edge_type", "to_id", "edge_id")
-        .offset(page * size)
-        .limit(size)
-    )
-
-
-def suggest(graph: BuiltGraph, q: str, size: int = 10):
-    """Autocomplete over node names (GrebiApi.java:228 → the Solr
-    autocomplete core the engine exports via sinks/solr_jsonl):
-    case-insensitive prefix on any name, shortest-first like the
-    reference's suggester ranking."""
-    ql = (q or "").lower()
-    return (
-        graph.nodes.select(F.explode("names").alias("name"))
-        .filter(F.lower(F.col("name")).startswith(ql))
-        .distinct()
-        .orderBy(F.length("name"), "name")
-        .limit(size)
-    )
-
-
-def node_document(graph: BuiltGraph, node_id: str) -> dict | None:
-    """The full node document (GrebiApi.java:69-80's Solr lookup):
-    header + every property as key -> [values]."""
-    hdr = graph.nodes.filter(F.col("node_id") == node_id).collect()
-    if not hdr:
-        return None
-    h = hdr[0].asDict()
-    props = (
-        graph.merged.filter(F.col("node_id") == node_id)
-        .groupBy("prop_key")
-        .agg(F.array_sort(F.collect_set("value")).alias("values"))
-        .collect()
-    )
-    doc = {
-        "grebi:nodeId": node_id,
-        "grebi:datasources": list(h.get("datasources") or []),
-        "grebi:type": list(h.get("types") or []),
-        "grebi:name": list(h.get("names") or []),
-    }
-    for r in props:
-        doc.setdefault(r["prop_key"], list(r["values"]))
-    return doc
-
-
-def resolve_documents(graph: BuiltGraph, alias_id: str) -> list[dict]:
-    """DataFrame-served twin of the KV resolve path, SAME response
-    shape: the stored JSON documents ({node_id, subgraph, properties}
-    for nodes, the edge row for edge ids), built from the exact
-    kv_node_table/kv_edge_table serializers — so /resolve clients see
-    one schema whether or not the subgraph has a KV store configured."""
-    from ..sinks.kv import kv_edge_table, kv_node_table
-
-    ids = (
-        graph.nodes.filter(
-            (F.col("node_id") == alias_id)
-            | F.array_contains("source_ids", alias_id)
-        ).select("node_id")
-    )
-    docs = [
-        json.loads(r["json"])
-        for r in kv_node_table(
-            graph.merged.join(F.broadcast(ids), "node_id", "left_semi")
-        ).collect()
-    ]
-    if not docs:  # maybe an edge id — the KV store serves those too
-        docs = [
-            json.loads(r["json"])
-            for r in kv_edge_table(
-                graph.edges.filter(F.col("edge_id") == alias_id)
-            ).collect()
-        ]
-    return docs
+from ..plans.graph_queries import graph_datasources, graph_stats
+from ..sinks import kv as kv_store
+from ..sinks import solr_jsonl as search_core
 
 
 def summary_document(subgraph: str, graph: BuiltGraph) -> dict:
@@ -157,7 +62,7 @@ def summary_document(subgraph: str, graph: BuiltGraph) -> dict:
 
 # the largest page any paged route serves; a larger ``size`` is cut to it
 MAX_PAGE_SIZE = 100
-# Spark's OFFSET/LIMIT take 32-bit ints
+# the largest row offset a page may start at (a 32-bit row number)
 _MAX_ROW = 2**31 - 1
 
 
@@ -194,8 +99,8 @@ def _page_envelope(rows: list[dict], page: int, size: int) -> dict:
 
 
 class GrebiApiServer:
-    """Serve one or more built graphs. ``port=0`` binds an ephemeral
-    port (exposed as ``.port`` after ``start()``)."""
+    """Serve one or more built graphs from their stores. ``port=0``
+    binds an ephemeral port (exposed as ``.port`` after ``start()``)."""
 
     def __init__(
         self,
@@ -205,42 +110,31 @@ class GrebiApiServer:
         kv_stores: dict[str, str] | None = None,
         solr_cores: dict[str, str] | None = None,
     ):
-        """``kv_stores`` maps subgraph name → a sqlite store built by
-        ``sinks.kv.build_kv_store``. When present for a subgraph, the
-        resolve route serves from PURE point reads against that store
-        (the reference's resolver-service shape: RocksDB multiGet, no
-        query engine on the hot path) and edge pages hydrate each
-        edge's stored JSON from it — the production serving wiring the
-        module docstring promises, exercised behind this flag.
+        """``kv_stores`` maps every subgraph name → its sqlite store,
+        built with edges by ``sinks.kv.build_kv_store``: /resolve, node
+        pages and edge pages read it (the reference's resolver-service
+        shape: RocksDB point reads, no query engine on the hot path).
 
-        ``solr_cores`` maps subgraph name → an executed search-core root
-        (``sinks.solr_jsonl.build_solr_core`` / ``refresh_solr_core``).
-        When present, /search and /suggest serve from the MAINTAINED
-        core's live documents — the reference's actual read path
-        (GrebiApi.java:185-227 queries Solr, the incrementally refreshed
-        store, never the graph build): a maintenance fold +
+        ``solr_cores`` maps every subgraph name → its executed search
+        core root (``sinks.solr_jsonl.build_solr_core`` /
+        ``refresh_solr_core``): /search and /suggest read the core's
+        serving file, the reference's actual read path
+        (GrebiApi.java:185-227 queries Solr, the incrementally
+        refreshed store, never the graph build) — a maintenance fold +
         ``refresh_solr_core`` changes what /search returns with no frame
-        rebuild. Responses are value-identical to the frame-backed
-        handlers (suite-asserted); subgraphs without a core fall back to
-        the frames."""
+        rebuild. A subgraph without both stores raises ValueError."""
         self.graphs = graphs
         self.kv_stores = kv_stores or {}
         self.solr_cores = solr_cores or {}
+        for name in graphs:
+            kv, core = self.kv_stores.get(name), self.solr_cores.get(name)
+            if not kv or not os.path.isfile(kv):
+                raise ValueError(f"subgraph {name!r} has no KV store")
+            if not core or not os.path.isfile(search_core.core_db_path(core)):
+                raise ValueError(f"subgraph {name!r} has no search core")
         self._host, self._port = host, port
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
-
-    def _core_docs(self, subgraph: str):
-        """Live documents of the subgraph's maintained core, re-resolved
-        per request so a refresh between requests is immediately
-        visible (the segment list is the core's publication point)."""
-        root = self.solr_cores.get(subgraph)
-        if not root:
-            return None
-        from ..sinks.solr_jsonl import read_solr_core
-
-        spark = self.graphs[subgraph].nodes.sparkSession
-        return read_solr_core(spark, root)
 
     # --- routing -----------------------------------------------------
 
@@ -268,25 +162,20 @@ class GrebiApiServer:
             # reference: configured collections of datasources; serve the
             # datasource universe per subgraph
             return 200, {
-                s: sorted(
-                    r["d"]
-                    for r in _rows(
-                        g.nodes.select(
-                            F.explode("datasources").alias("d")
-                        ).distinct()
-                    )
-                )
+                s: sorted(r["d"] for r in _rows(graph_datasources(g)))
                 for s, g in self.graphs.items()
             }
         if len(rest) >= 2 and rest[0] == "subgraphs":
-            g = self.graphs.get(rest[1])
+            subgraph = rest[1]
+            g = self.graphs.get(subgraph)
             if g is None:
-                return 404, {"error": f"no subgraph {rest[1]!r}"}
+                return 404, {"error": f"no subgraph {subgraph!r}"}
+            kv, core = self.kv_stores[subgraph], self.solr_cores[subgraph]
             tail = rest[2:]
             if not tail:
                 return 200, {r["entity"]: r["n"] for r in _rows(graph_stats(g))}
             if tail == ["summary"]:
-                return 200, summary_document(rest[1], g)
+                return 200, summary_document(subgraph, g)
             if tail == ["search"]:
                 page, size = _paging(query)
                 # every non-reserved query param is a WHOLE_FIELD filter
@@ -303,10 +192,17 @@ class GrebiApiServer:
                     for k, vs in query.items()
                     if k not in reserved
                 )
-                # one kwargs dict feeds BOTH read paths, so the
-                # value-identity contract between them cannot drift on
-                # a parameter change that misses one branch
-                kw = dict(
+                # rank=bm25 serves Lucene's relevance model (Okapi BM25
+                # over the live core's names); the default is the
+                # id/name boost ladder. Both share the filter semantics.
+                search = (
+                    search_core.search_core_docs_bm25
+                    if g1("rank") == "bm25"
+                    else search_core.search_core_docs
+                )
+                rows, facets = search(
+                    core,
+                    g1("q", ""),
                     page=page,
                     size=size,
                     type_filter=g1("type"),
@@ -315,96 +211,31 @@ class GrebiApiServer:
                     exclude_obsolete=g1("includeObsoleteEntries", "false")
                     != "true",
                 )
-                core_docs = self._core_docs(rest[1])
-                if core_docs is not None:
-                    # rank=bm25 serves Lucene's actual relevance model
-                    # (Okapi BM25 over the live core's names), scored
-                    # from the core's STORED postings index (index_root)
-                    # — no per-request corpus tokenize; default stays
-                    # the id/name boost ladder. Both share the same
-                    # filter/facet semantics (_apply_core_filters).
-                    from ..sinks.solr_jsonl import (
-                        search_core_docs,
-                        search_core_docs_bm25,
-                    )
-
-                    if g1("rank") == "bm25":
-                        page_df, facets = search_core_docs_bm25(
-                            core_docs,
-                            g1("q", ""),
-                            index_root=self.solr_cores.get(rest[1]),
-                            **kw,
-                        )
-                    else:
-                        page_df, facets = search_core_docs(
-                            core_docs, g1("q", ""), **kw
-                        )
-                else:
-                    page_df, facets = search_nodes(g, g1("q", ""), **kw)
-                body = _page_envelope(_rows(page_df), page, size)
+                body = _page_envelope(rows, page, size)
                 if facets:
-                    body["facetFieldsToCounts"] = {
-                        f: {r["value"]: r["count"] for r in _rows(df)}
-                        for f, df in facets.items()
-                    }
+                    body["facetFieldsToCounts"] = facets
                 return 200, body
             if tail == ["suggest"]:
-                core_docs = self._core_docs(rest[1])
-                if core_docs is not None:
-                    from ..sinks.solr_jsonl import suggest_core_docs
-
-                    return 200, [
-                        r["name"]
-                        for r in _rows(suggest_core_docs(core_docs, g1("q", "")))
-                    ]
-                return 200, [r["name"] for r in _rows(suggest(g, g1("q", "")))]
+                return 200, search_core.suggest_core_docs(core, g1("q", ""))
             if len(tail) == 2 and tail[0] == "resolve":
-                kv = self.kv_stores.get(rest[1])
-                if kv:
-                    from ..sinks.kv import kv_store_get
-
-                    got = kv_store_get(kv, [tail[1]])
-                    return 200, [
-                        json.loads(v) for v in got.values()
-                    ]
-                return 200, resolve_documents(g, tail[1])
+                got = kv_store.kv_store_get(kv, [tail[1]])
+                return 200, [json.loads(v) for v in got.values()]
             if len(tail) >= 2 and tail[0] == "nodes":
                 node_id = tail[1]
                 if len(tail) == 2:
-                    doc = node_document(g, node_id)
+                    doc = kv_store.kv_node_document(kv, node_id)
                     return (200, doc) if doc else (404, {"error": "no such node"})
-                page, size = _paging(query)
-                if tail[2] == "incoming_edges":
-                    rows = _rows(
-                        incoming_edges(g, node_id, page=page, size=size,
-                                       edge_type=g1("type"))
+                direction = {
+                    "incoming_edges": "incoming", "outgoing_edges": "outgoing"
+                }.get(tail[2])
+                if len(tail) == 3 and direction:
+                    page, size = _paging(query)
+                    rows = kv_store.kv_edge_page(
+                        kv, node_id, direction, page=page, size=size,
+                        edge_type=g1("type"),
                     )
-                    self._hydrate_edges(rest[1], rows)
-                    return 200, _page_envelope(rows, page, size)
-                if tail[2] == "outgoing_edges":
-                    rows = _rows(
-                        outgoing_edges(g, node_id, page=page, size=size,
-                                       edge_type=g1("type"))
-                    )
-                    self._hydrate_edges(rest[1], rows)
                     return 200, _page_envelope(rows, page, size)
         return 404, {"error": "not found"}
-
-    def _hydrate_edges(self, subgraph: str, rows: list[dict]) -> None:
-        """Edge-page hydration from the built KV: each page row gains
-        the edge's stored JSON document (``edge`` key), a multiGet of
-        page-size ids — the reference hydrates edge pages from its KV
-        build the same way (nextflow/01_create_subgraph.nf:309-312)."""
-        kv = self.kv_stores.get(subgraph)
-        if not kv or not rows:
-            return
-        from ..sinks.kv import kv_store_get
-
-        got = kv_store_get(kv, [r["edge_id"] for r in rows])
-        for r in rows:
-            doc = got.get(r["edge_id"])
-            if doc is not None:
-                r["edge"] = json.loads(doc)
 
     # --- server lifecycle --------------------------------------------
 

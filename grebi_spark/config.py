@@ -9,7 +9,7 @@ ontology superclasses lifted into grebi:type, and exclusion lists.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)

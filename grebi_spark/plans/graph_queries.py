@@ -14,7 +14,7 @@ they run on *any* graph built by pipeline.build_graph.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..pipeline import BuiltGraph
@@ -330,6 +330,44 @@ def incoming_edges(
     )
 
 
+def outgoing_edges(
+    graph: BuiltGraph, node_id: str, page: int = 0, size: int = 20,
+    edge_type: str | None = None,
+) -> DataFrame:
+    """Q8 mirror of incoming_edges (GrebiApi.java:129-176): the edges
+    FROM a node, hydrated with the target node's header."""
+    e = graph.edges.filter(F.col("from_id") == node_id)
+    if edge_type:
+        e = e.filter(F.col("edge_type") == edge_type)
+    to_meta = graph.nodes.select(
+        F.col("node_id").alias("to_id"),
+        F.col("names").alias("to_names"),
+        F.col("types").alias("to_types"),
+    )
+    return (
+        e.join(to_meta, "to_id", "left")
+        .select("edge_id", "edge_type", "to_id", "to_names", "to_types", "datasources")
+        .orderBy("edge_type", "to_id", "edge_id")
+        .offset(page * size)
+        .limit(size)
+    )
+
+
+def suggest(graph: BuiltGraph, q: str, size: int = 10) -> DataFrame:
+    """Q7 — autocomplete over node names (GrebiApi.java:228 → the Solr
+    autocomplete core the engine exports via sinks/solr_jsonl):
+    case-insensitive prefix on any name, shortest-first like the
+    reference's suggester ranking."""
+    ql = (q or "").lower()
+    return (
+        graph.nodes.select(F.explode("names").alias("name"))
+        .filter(F.lower(F.col("name")).startswith(ql))
+        .distinct()
+        .orderBy(F.length("name"), "name")
+        .limit(size)
+    )
+
+
 def subgraph_all(
     graph: BuiltGraph, alias_id: str, max_level: int = 2
 ) -> tuple[DataFrame, DataFrame]:
@@ -367,3 +405,8 @@ def graph_stats(graph: BuiltGraph) -> DataFrame:
         F.lit("edges").alias("entity"), "n"
     )
     return n.unionAll(e)
+
+
+def graph_datasources(graph: BuiltGraph) -> DataFrame:
+    """The distinct datasources of a graph's nodes."""
+    return graph.nodes.select(F.explode("datasources").alias("d")).distinct()

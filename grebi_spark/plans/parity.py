@@ -819,7 +819,7 @@ def edge_page_outgoing_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     hydrated with the target node's header. Deterministic paging: total
     order (edge_type, to_id, edge_id). The oracle restates hydration
     relationally, so the hash proves build → materialise → page."""
-    from ..api.http_api import outgoing_edges
+    from .graph_queries import outgoing_edges
 
     g = _built_graph(spark, sf_dir)
     return outgoing_edges(g, "n:3", page=0, size=10).select(
@@ -884,7 +884,7 @@ def graph_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
     GrebiApi.java:228): case-insensitive name-prefix autocomplete,
     shortest-first with a name tiebreak — the graph-side twin of
     autocomplete_parts (which runs on the parts table)."""
-    from ..api.http_api import suggest
+    from .graph_queries import suggest
 
     g = _built_graph(spark, sf_dir)
     return suggest(g, "NATION_1", size=5)
@@ -1586,15 +1586,17 @@ def core_search_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     (api.http_api, ``solr_cores``); the oracle renders the same page
     from the from-scratch post-verb graph, so a stale segment, an
     uncovered tombstone, or a scoring drift all hash-mismatch."""
-    from ..sinks.solr_jsonl import read_solr_core, search_core_docs
+    from ..sinks.solr_jsonl import search_core_docs
 
-    docs = read_solr_core(spark, _refreshed_core_root(spark, sf_dir))
-    page, _facets = search_core_docs(docs, "n:1", page=1, size=5)
-    return page.select(
-        "node_id",
-        F.array_join("types", ",").alias("types"),
-        F.array_join("names", ",").alias("names"),
-        F.col("score").cast("long").alias("score"),
+    page, _facets = search_core_docs(
+        _refreshed_core_root(spark, sf_dir), "n:1", page=1, size=5
+    )
+    return spark.createDataFrame(
+        [
+            (r["node_id"], ",".join(r["types"]), ",".join(r["names"]), r["score"])
+            for r in page
+        ],
+        "node_id string, types string, names string, score long",
     )
 
 
@@ -1614,34 +1616,32 @@ _CORE_BM25_TOPK = 15
 
 
 def core_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 SERVED FROM THE MAINTAINED CORE'S STORED POSTINGS INDEX —
-    Solr's actual ranking model (Lucene BM25Similarity) under Lucene's
-    actual index-vs-query split: tokenization happens at index/refresh
-    time (build_solr_core / refresh_core_index write per-segment
-    postings + a live-corpus stats snapshot), and this request probes
-    the postings by query term (pushdown-pruned), applies the
-    delta-sized tombstones, and reads ONE stored stats row — no
-    request-time tokenize, nothing corpus-proportional. The delta
-    refresh rolled the stats forward (new = old − killed + added), so
-    the verb's new region docs ('MIDDLE EAST' carries the only 'east')
-    participate in matching AND in df/avgdl. The oracle recomputes the
-    whole model from the from-scratch post-verb doc set — a stale
-    postings segment, an unapplied tombstone, or a drifted stats
-    snapshot shifts scores and hash-mismatches. Reference: GrebiApi's
-    /search delegates ranking to Solr (GrebiSolrClient.java:105-147);
-    here the serving tier ranks natively from its own index."""
-    from ..sinks.solr_jsonl import bm25_index_scored
+    """BM25 SERVED FROM THE MAINTAINED CORE'S STORED POSTINGS — Solr's
+    actual ranking model (Lucene BM25Similarity) under Lucene's actual
+    index-vs-query split: tokenization happens at build/refresh time
+    (build_solr_core / refresh_solr_core write the postings and roll
+    the live-corpus stats row forward), and this request reads the
+    postings of its terms and ONE stats row from the serving sqlite
+    file — no request-time tokenize, no Spark. The delta refresh moved
+    the stats (new = old − replaced + upserted), so the verb's new
+    region docs ('MIDDLE EAST' carries the only 'east') participate in
+    matching AND in df/avgdl. The oracle recomputes the whole model
+    from the from-scratch post-verb doc set — a stale posting, an
+    unapplied deletion, or a drifted stats row shifts scores and
+    hash-mismatches. Reference: GrebiApi's /search delegates ranking to
+    Solr (GrebiSolrClient.java:105-147); here the serving tier ranks
+    natively from its own index."""
+    from ..sinks.solr_jsonl import search_core_docs_bm25
 
-    key = f"corebm25:{spark.sparkContext.applicationId}:{sf_dir}"
-    if key not in _INC_CACHE:
-        root = _refreshed_core_root(spark, sf_dir)
-        scored = bm25_index_scored(spark, root, _CORE_BM25_TERMS)
-        _INC_CACHE[key] = (
-            scored.orderBy(F.desc("score"), "node_id")
-            .limit(_CORE_BM25_TOPK)
-            .localCheckpoint()
-        )
-    return _INC_CACHE[key]
+    page, _facets = search_core_docs_bm25(
+        _refreshed_core_root(spark, sf_dir),
+        " ".join(_CORE_BM25_TERMS),
+        size=_CORE_BM25_TOPK,
+    )
+    return spark.createDataFrame(
+        [(r["node_id"], r["score"]) for r in page],
+        "node_id string, score double",
+    )
 
 
 ORACLE_CORE_BM25 = f"""

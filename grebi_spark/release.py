@@ -191,22 +191,23 @@ def make_multi_release(
 
 def release_server(graphs: dict, out_dir: str, **kwargs):
     """The facade over a (multi-)release root: each subgraph's /search
-    and /suggest serve its MAINTAINED solr core, /resolve and edge
-    hydration its executed KV store — one service map across every
+    and /suggest serve its MAINTAINED solr core, /resolve, node and edge
+    pages its executed KV store — one service map across every
     subgraph (``/summaries`` aggregates them, GrebiSummarySvc.java:34).
+    A subgraph whose release lacks either store raises ValueError.
     Call ``.start()`` on the result."""
     from .api.http_api import GrebiApiServer
 
-    kv_stores, solr_cores = {}, {}
-    for name in graphs:
-        kv = os.path.join(out_dir, name, "kv", "store.sqlite")
-        if os.path.exists(kv):
-            kv_stores[name] = kv
-        core = os.path.join(out_dir, name, "solr", "core")
-        if os.path.isdir(core):
-            solr_cores[name] = core
     return GrebiApiServer(
-        graphs, kv_stores=kv_stores, solr_cores=solr_cores, **kwargs
+        graphs,
+        kv_stores={
+            name: os.path.join(out_dir, name, "kv", "store.sqlite")
+            for name in graphs
+        },
+        solr_cores={
+            name: os.path.join(out_dir, name, "solr", "core") for name in graphs
+        },
+        **kwargs,
     )
 
 

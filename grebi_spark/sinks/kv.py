@@ -9,9 +9,21 @@ serve time either (a) hit this table with a pushed-down id predicate
 or (b) bulk-load it into any external KV store. ``resolve`` implements
 the resolver-service semantics (multiGet incl. alias resolution) as one
 broadcast join.
+
+The served store is (b) executed: ``build_kv_store`` bulk-loads a sqlite
+file that also holds the node header and the indexed edge endpoints, and
+the API reads /resolve, node pages and edge pages from it with plain
+sqlite reads (``kv_store_get``, ``kv_node_document``, ``kv_edge_page``).
 """
 
 from __future__ import annotations
+
+import json
+import os
+import sqlite3
+import threading
+from contextlib import closing
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,15 +48,29 @@ def kv_alias_table(node_meta: DataFrame) -> DataFrame:
     ).distinct()
 
 
+def kv_node_header(node_meta: DataFrame) -> DataFrame:
+    """(node_id, names, types, datasources) — the node header the
+    serving store answers node pages and edge-page endpoints from, each
+    array as its JSON text."""
+    return node_meta.select(
+        "node_id",
+        *[F.to_json(c).alias(c) for c in ("names", "types", "datasources")],
+    )
+
+
 def kv_edge_table(edges: DataFrame) -> DataFrame:
-    """(id, json) — one row per materialised edge, value = the full
-    edge JSON. The reference bulk-loads edges next to nodes into the
-    same store (nextflow/01_create_subgraph.nf:309-312 loads the edge
-    summary alongside; grebi_shared/src/lib.rs:26-49 keys both by their
-    id line), so the resolver can hydrate an edge id without touching
-    the graph DB."""
+    """(id, edge_type, from_id, to_id, json) — one row per materialised
+    edge, value = the full edge JSON, with the endpoint columns an edge
+    page is range-scanned by. The reference bulk-loads edges next to
+    nodes into the same store (nextflow/01_create_subgraph.nf:309-312
+    loads the edge summary alongside; grebi_shared/src/lib.rs:26-49
+    keys both by their id line), so the resolver can hydrate an edge id
+    without touching the graph DB."""
     return edges.select(
         F.col("edge_id").alias("id"),
+        "edge_type",
+        "from_id",
+        "to_id",
         F.to_json(
             F.struct(
                 "edge_id", "edge_type", "subgraph", "from_id", "to_id", "datasources"
@@ -105,16 +131,53 @@ def resolve(
     return out
 
 
-def _write_shards(stage: str, table: str, cols: str, df: DataFrame) -> None:
+# the serving store's tables, each with its columns in shard order
+_KV_TABLES = {
+    "kv": "id TEXT, json TEXT",
+    "alias": "alias TEXT, node_id TEXT",
+    "node": "node_id TEXT, names TEXT, types TEXT, datasources TEXT",
+    "edge": "id TEXT, edge_type TEXT, from_id TEXT, to_id TEXT, json TEXT",
+}
+_KV_SCHEMA = (
+    "CREATE TABLE kv (id TEXT PRIMARY KEY, json TEXT)",
+    "CREATE TABLE alias (alias TEXT, node_id TEXT)",
+    "CREATE TABLE node (node_id TEXT PRIMARY KEY, names TEXT, types TEXT,"
+    " datasources TEXT)",
+    "CREATE TABLE edge (id TEXT PRIMARY KEY, edge_type TEXT, from_id TEXT,"
+    " to_id TEXT, json TEXT)",
+)
+# created after the bulk load: an edge page is one range scan of these
+_KV_INDEXES = (
+    "CREATE INDEX alias_idx ON alias (alias)",
+    "CREATE INDEX edge_in ON edge (to_id, edge_type, from_id, id)",
+    "CREATE INDEX edge_out ON edge (from_id, edge_type, to_id, id)",
+)
+
+
+def _write_shards(
+    stage: str, tag: str, tables: dict[str, str], df: DataFrame, rows_of=None
+) -> None:
     """Executor-side sqlite shard write (the per-ingest-job SST-file
     analogue). Each partition streams into its own shard db under an
     attempt-unique tmp name, atomic-rename on success: a retried or
     speculative attempt can never collide with (or corrupt) a completed
     shard, and the merge only ever sees complete files — same protocol
     as the grebi_jsonl writer. Last completed attempt wins; partition
-    content is deterministic, so any winner is correct."""
-    n_cols = len(cols.split(","))
-    marks = ", ".join(["?"] * n_cols)
+    content is deterministic, so any winner is correct.
+
+    ``tables`` maps each table of the shard to its column spec;
+    ``rows_of(row)`` yields the ``(table, values)`` pairs one input row
+    becomes — by default the row itself, into the single table."""
+    if rows_of is None:
+        (only,) = tables
+
+        def rows_of(r):
+            return ((only, tuple(r)),)
+
+    inserts = {
+        t: f"INSERT INTO {t} VALUES ({', '.join(['?'] * len(cols.split(',')))})"
+        for t, cols in tables.items()
+    }
 
     def write(it):
         import os as _os
@@ -124,18 +187,58 @@ def _write_shards(stage: str, table: str, cols: str, df: DataFrame) -> None:
 
         ctx = TaskContext.get()
         pid = ctx.partitionId()
-        tmp = f"{stage}/shard-{table}-{pid:05d}.tmp-{ctx.taskAttemptId()}"
+        tmp = f"{stage}/shard-{tag}-{pid:05d}.tmp-{ctx.taskAttemptId()}"
         con = sq.connect(tmp)
-        con.execute(f"CREATE TABLE {table} ({cols})")
-        con.executemany(
-            f"INSERT INTO {table} VALUES ({marks})", (tuple(r) for r in it)
-        )
+        for t, cols in tables.items():
+            con.execute(f"CREATE TABLE {t} ({cols})")
+        pending = {t: [] for t in tables}
+        for r in it:
+            for t, values in rows_of(r):
+                rows = pending[t]
+                rows.append(values)
+                if len(rows) >= 4096:
+                    con.executemany(inserts[t], rows)
+                    rows.clear()
+        for t, rows in pending.items():
+            con.executemany(inserts[t], rows)
         con.commit()
         con.close()
-        _os.replace(tmp, f"{stage}/shard-{table}-{pid:05d}.sqlite")
+        _os.replace(tmp, f"{stage}/shard-{tag}-{pid:05d}.sqlite")
         return iter(())
 
     df.rdd.mapPartitions(write).count()
+
+
+def _load_shards(con, stage: str, tag: str, tables, prefix: str = "") -> None:
+    """Append every completed ``tag`` shard under ``stage`` to ``con``'s
+    ``prefix + table`` tables. ATTACH is not allowed inside a
+    transaction, so each shard is committed before it is detached."""
+    import glob
+
+    for f in sorted(glob.glob(f"{stage}/shard-{tag}-*.sqlite")):
+        con.execute("ATTACH DATABASE ? AS s", (f,))
+        for t in tables:
+            con.execute(f"INSERT INTO {prefix}{t} SELECT * FROM s.{t}")
+        con.commit()
+        con.execute("DETACH DATABASE s")
+
+
+def _kv_frames(merged, node_meta, edges, shards: int) -> dict[str, DataFrame]:
+    """Each serving table's rows, range-partitioned and sorted by key;
+    no ``edge`` rows without ``edges``."""
+    frames = {
+        "kv": kv_node_table(merged),
+        "alias": kv_alias_table(node_meta),
+        "node": kv_node_header(node_meta),
+    }
+    if edges is not None:
+        frames["edge"] = kv_edge_table(edges)
+    return {
+        t: df.repartitionByRange(shards, df.columns[0]).sortWithinPartitions(
+            df.columns[0]
+        )
+        for t, df in frames.items()
+    }
 
 
 def build_kv_store(
@@ -153,19 +256,19 @@ def build_kv_store(
     an embedded single-file B-tree KV — so the build actually RUNS here,
     not just generates artifacts for an absent binary.
 
-    Distributed bulk load, Spark-first: the KV table is range-
-    partitioned and sorted by key, each partition streams its rows into
-    its own shard db on the executor (the analogue of per-ingest-job SST
-    files), and the driver's compaction pass ATTACHes the shards into
-    ONE serving file in key order + VACUUMs (compact_range). Shard
-    write is executor-side IO with zero driver involvement; only the
-    merge is driver-side, exactly like the reference's single-node
-    compaction. Local/shared-FS constraint as for every embedded store.
-    Returns the number of node rows loaded."""
-    import glob
-    import os
-    import sqlite3
+    Besides the id→JSON tables (``kv``, ``alias``, ``edge``) the store
+    holds what node and edge pages are served from: the ``node`` header
+    table and the ``edge`` table's endpoint columns, indexed
+    ``(to_id, edge_type, from_id, id)`` and ``(from_id, edge_type,
+    to_id, id)`` — the edge-page order.
 
+    Distributed bulk load, Spark-first: each table is range-partitioned
+    and sorted by key, each partition streams its rows into its own
+    shard db on the executor (the analogue of per-ingest-job SST files),
+    and the driver's compaction pass ATTACHes the shards into ONE
+    serving file in key order, indexes it and VACUUMs (compact_range).
+    Local/shared-FS constraint as for every embedded store. Returns the
+    number of node rows loaded."""
     import shutil
 
     os.makedirs(os.path.dirname(db_path) or ".", exist_ok=True)
@@ -173,58 +276,32 @@ def build_kv_store(
     shutil.rmtree(stage, ignore_errors=True)  # incl. stale .tmp-* attempts
     os.makedirs(stage, exist_ok=True)
 
-    _write_shards(
-        stage,
-        "kv",
-        "id TEXT, json TEXT",
-        kv_node_table(merged).repartitionByRange(shards, "id").sortWithinPartitions("id"),
-    )
-    _write_shards(
-        stage,
-        "alias",
-        "alias TEXT, node_id TEXT",
-        kv_alias_table(node_meta)
-        .repartitionByRange(shards, "alias")
-        .sortWithinPartitions("alias"),
-    )
-    tables = ["kv", "alias"]
-    if edges is not None:
-        _write_shards(
-            stage,
-            "edge",
-            "id TEXT, json TEXT",
-            kv_edge_table(edges)
-            .repartitionByRange(shards, "id")
-            .sortWithinPartitions("id"),
-        )
-        tables.append("edge")
+    frames = _kv_frames(merged, node_meta, edges, shards)
+    for table, df in frames.items():
+        _write_shards(stage, table, {table: _KV_TABLES[table]}, df)
 
     # compaction: merge shards in key order into the serving file
     if os.path.exists(db_path):
         os.remove(db_path)
-    con = sqlite3.connect(db_path)
-    con.execute("CREATE TABLE kv (id TEXT PRIMARY KEY, json TEXT)")
-    con.execute("CREATE TABLE alias (alias TEXT, node_id TEXT)")
-    con.execute("CREATE TABLE edge (id TEXT PRIMARY KEY, json TEXT)")
-    # store-level metadata: whether the edge table is POPULATED by
-    # contract — refresh_kv_store must not upsert delta edges into a
-    # store deliberately built without edges (a half-populated edge
-    # table matches neither rebuild shape)
-    con.execute("CREATE TABLE meta (k TEXT PRIMARY KEY, v TEXT)")
-    con.execute(
-        "INSERT INTO meta VALUES ('with_edges', ?)",
-        ("1" if edges is not None else "0",),
-    )
-    for table in tables:
-        for f in sorted(glob.glob(f"{stage}/shard-{table}-*.sqlite")):
-            con.execute("ATTACH DATABASE ? AS s", (f,))
-            con.execute(f"INSERT INTO {table} SELECT * FROM s.{table}")
-            con.commit()
-            con.execute("DETACH DATABASE s")
-    con.execute("CREATE INDEX alias_idx ON alias (alias)")
-    con.execute("VACUUM")  # the compact_range step
-    n = con.execute("SELECT count(*) FROM kv").fetchone()[0]
-    con.close()
+    with closing(sqlite3.connect(db_path)) as con:
+        for ddl in _KV_SCHEMA:
+            con.execute(ddl)
+        # store-level metadata: whether the edge table is POPULATED by
+        # contract — refresh_kv_store must not upsert delta edges into a
+        # store deliberately built without edges (a half-populated edge
+        # table matches neither rebuild shape)
+        con.execute("CREATE TABLE meta (k TEXT PRIMARY KEY, v TEXT)")
+        con.execute(
+            "INSERT INTO meta VALUES ('with_edges', ?)",
+            ("1" if edges is not None else "0",),
+        )
+        for table in frames:
+            _load_shards(con, stage, table, [table])
+        for ddl in _KV_INDEXES:
+            con.execute(ddl)
+        con.commit()
+        con.execute("VACUUM")  # the compact_range step
+        n = con.execute("SELECT count(*) FROM kv").fetchone()[0]
     shutil.rmtree(stage, ignore_errors=True)  # shards merged; drop them
     return n
 
@@ -240,18 +317,15 @@ def refresh_kv_store(state, db_path: str, shards: int = 4) -> dict:
     delta-sized throughout.
 
     Uses the verb's retained ``last_delta`` frames (all delta-sized,
-    already materialised): retired canonicals' node/alias rows and
-    removed edge ids are DELETEd, the re-merged cliques' node/alias/edge
-    rows INSERTed — a persisting re-merged canonical is in both sets,
-    i.e. an upsert. Delta rows arrive via the same distributed shard
+    already materialised): retired canonicals' node/alias/header rows
+    and removed edge ids are DELETEd, the re-merged cliques' rows
+    INSERTed — a persisting re-merged canonical is in both sets, i.e.
+    an upsert. Delta rows arrive via the same distributed shard
     protocol as the build; the driver applies deletes + inserts in ONE
     transaction, so a reader never observes a half-applied refresh.
     Result is table-for-table identical to ``build_kv_store`` of the
     new state (asserted by the suite). Returns applied-row counts."""
-    import glob
-    import os
     import shutil
-    import sqlite3
 
     d = state.last_delta
     if not d:
@@ -285,39 +359,20 @@ def refresh_kv_store(state, db_path: str, shards: int = 4) -> dict:
     shutil.rmtree(stage, ignore_errors=True)  # incl. stale .tmp-* attempts
     os.makedirs(stage, exist_ok=True)
 
-    retired = d["retired"].select(F.col("node_id").alias("id"))
-    _write_shards(stage, "del_node", "id TEXT", retired.repartition(shards))
-    _write_shards(
-        stage,
-        "del_edge",
-        "id TEXT",
-        d["removed_edge_ids"].repartition(shards),
-    )
-    _write_shards(
-        stage,
-        "kv",
-        "id TEXT, json TEXT",
-        kv_node_table(d["merged_delta"])
-        .repartitionByRange(shards, "id")
-        .sortWithinPartitions("id"),
-    )
-    _write_shards(
-        stage,
-        "alias",
-        "alias TEXT, node_id TEXT",
-        kv_alias_table(d["meta_delta"])
-        .repartitionByRange(shards, "alias")
-        .sortWithinPartitions("alias"),
-    )
-    if with_edges:
-        _write_shards(
-            stage,
-            "edge",
-            "id TEXT, json TEXT",
-            kv_edge_table(d["new_edge_rows"])
-            .repartitionByRange(shards, "id")
-            .sortWithinPartitions("id"),
-        )
+    tables = dict(_KV_TABLES, del_node="id TEXT", del_edge="id TEXT")
+    staged = {
+        "del_node": d["retired"].select(F.col("node_id").alias("id"))
+        .repartition(shards),
+        "del_edge": d["removed_edge_ids"].repartition(shards),
+        **_kv_frames(
+            d["merged_delta"],
+            d["meta_delta"],
+            d["new_edge_rows"] if with_edges else None,
+            shards,
+        ),
+    }
+    for table, df in staged.items():
+        _write_shards(stage, table, {table: tables[table]}, df)
 
     con = sqlite3.connect(db_path, isolation_level=None)  # manual txn
     counts = {"deleted_nodes": 0, "deleted_edges": 0,
@@ -326,42 +381,29 @@ def refresh_kv_store(state, db_path: str, shards: int = 4) -> dict:
         # stage all delta shards into TEMP tables first — sqlite forbids
         # ATTACH inside a transaction, so attach/copy/detach happens
         # outside it and the visible apply below stays atomic
-        for table, cols in (
-            ("del_node", "id TEXT"),
-            ("del_edge", "id TEXT"),
-            ("kv", "id TEXT, json TEXT"),
-            ("alias", "alias TEXT, node_id TEXT"),
-            ("edge", "id TEXT, json TEXT"),
-        ):
+        for table, cols in tables.items():  # stage_edge stays empty without edges
             con.execute(f"CREATE TEMP TABLE stage_{table} ({cols})")
-            for f in sorted(glob.glob(f"{stage}/shard-{table}-*.sqlite")):
-                con.execute("ATTACH DATABASE ? AS s", (f,))
-                con.execute(
-                    f"INSERT INTO stage_{table} SELECT * FROM s.{table}"
-                )
-                con.execute("DETACH DATABASE s")
+            _load_shards(con, stage, table, [table], prefix="stage_")
 
         con.execute("BEGIN")
         # deletes first: a persisting re-merged canonical is retired AND
         # re-inserted below (upsert); aliases are keyed back by node_id
+        retired = "(SELECT id FROM stage_del_node)"
         counts["deleted_nodes"] = con.execute(
-            "DELETE FROM kv WHERE id IN (SELECT id FROM stage_del_node)"
+            f"DELETE FROM kv WHERE id IN {retired}"
         ).rowcount
-        con.execute(
-            "DELETE FROM alias WHERE node_id IN (SELECT id FROM stage_del_node)"
-        )
+        con.execute(f"DELETE FROM alias WHERE node_id IN {retired}")
+        con.execute(f"DELETE FROM node WHERE node_id IN {retired}")
         counts["deleted_edges"] = con.execute(
             "DELETE FROM edge WHERE id IN (SELECT id FROM stage_del_edge)"
         ).rowcount
-        counts["nodes"] = con.execute(
-            "INSERT INTO kv SELECT * FROM stage_kv"
-        ).rowcount
-        counts["aliases"] = con.execute(
-            "INSERT INTO alias SELECT * FROM stage_alias"
-        ).rowcount
-        counts["edges"] = con.execute(
-            "INSERT INTO edge SELECT * FROM stage_edge"
-        ).rowcount
+        for table, key in (("kv", "nodes"), ("alias", "aliases"),
+                           ("node", None), ("edge", "edges")):
+            n = con.execute(
+                f"INSERT INTO {table} SELECT * FROM stage_{table}"
+            ).rowcount
+            if key:
+                counts[key] = n
         con.execute("COMMIT")
     except Exception:
         if con.in_transaction:
@@ -373,15 +415,36 @@ def refresh_kv_store(state, db_path: str, shards: int = 4) -> dict:
     return counts
 
 
+# --- the serving read path: pure sqlite reads, no Spark -------------------
+
+_readers = threading.local()
+
+
+def open_store(path: str) -> sqlite3.Connection:
+    """This thread's read-only connection to the sqlite store at
+    ``path``. ``mode=ro`` makes a wrong path raise instead of creating
+    an empty file. The connection is reopened when the file changes on
+    disk (a store rebuilt in place is a new file)."""
+    st = os.stat(path)  # FileNotFoundError for a missing store
+    key = (st.st_ino, st.st_mtime_ns)
+    cons = _readers.__dict__.setdefault("cons", {})
+    hit = cons.get(path)
+    if hit is not None:
+        if hit[0] == key:
+            return hit[1]
+        hit[1].close()
+    con = sqlite3.connect(f"file:{quote(os.path.abspath(path))}?mode=ro", uri=True)
+    cons[path] = (key, con)
+    return con
+
+
 def kv_store_get(db_path: str, ids: list[str]) -> dict[str, str]:
     """Serving-side multiGet with alias resolution — the resolver
     service's read path (grebi_resolver_service semantics, same contract
     as ``resolve``) executed as PURE point reads against the built
     store: no Spark session anywhere near the hot path, which is the
     entire reason the reference serves from a KV build."""
-    import sqlite3
-
-    con = sqlite3.connect(db_path)
+    con = open_store(db_path)
     out: dict[str, str] = {}
     for i in ids:
         row = con.execute("SELECT json FROM kv WHERE id = ?", (i,)).fetchone()
@@ -399,5 +462,77 @@ def kv_store_get(db_path: str, ids: list[str]) -> dict[str, str]:
                 ).fetchone()
         if row:
             out[i] = row[0]
-    con.close()
+    return out
+
+
+def _json_or_none(text: str | None):
+    return None if text is None else json.loads(text)
+
+
+def kv_node_document(db_path: str, node_id: str) -> dict | None:
+    """The full node document (GrebiApi.java:69-80): the header, then
+    every stored property as key -> its sorted distinct values (a
+    header key is not overwritten by a property of the same name).
+    ``None`` when the store has no such node."""
+    row = open_store(db_path).execute(
+        "SELECT n.datasources, n.types, n.names, kv.json FROM node n"
+        " LEFT JOIN kv ON kv.id = n.node_id WHERE n.node_id = ?",
+        (node_id,),
+    ).fetchone()
+    if row is None:
+        return None
+    datasources, types, names, stored = row
+    doc = {
+        "grebi:nodeId": node_id,
+        "grebi:datasources": _json_or_none(datasources) or [],
+        "grebi:type": _json_or_none(types) or [],
+        "grebi:name": _json_or_none(names) or [],
+    }
+    props = json.loads(stored)["properties"] if stored else {}
+    for key, values in props.items():
+        doc.setdefault(
+            key, sorted({v["value"] for v in values if v.get("value") is not None})
+        )
+    return doc
+
+
+def kv_edge_page(
+    db_path: str,
+    node_id: str,
+    direction: str,
+    page: int = 0,
+    size: int = 20,
+    edge_type: str | None = None,
+) -> list[dict]:
+    """One page of a node's ``incoming`` or ``outgoing`` edges
+    (GrebiApi.java:81-176) in ``(edge_type, other end, edge_id)`` order,
+    each with the other end's names and types and the stored edge
+    document (``edge``): one range scan of the edge index, joined to the
+    node header."""
+    near, far = {"incoming": ("to_id", "from_id"),
+                 "outgoing": ("from_id", "to_id")}[direction]
+    end = far[:-3]
+    where, args = f"e.{near} = ?", [node_id]
+    if edge_type:
+        where += " AND e.edge_type = ?"
+        args.append(edge_type)
+    rows = open_store(db_path).execute(
+        f"SELECT e.id, e.edge_type, e.{far}, n.names, n.types, e.json"
+        f" FROM edge e LEFT JOIN node n ON n.node_id = e.{far}"
+        f" WHERE {where} ORDER BY e.edge_type, e.{far}, e.id"
+        " LIMIT ? OFFSET ?",
+        (*args, size, page * size),
+    ).fetchall()
+    out = []
+    for edge_id, etype, other, names, types, stored in rows:
+        edge = json.loads(stored)
+        out.append({
+            "edge_id": edge_id,
+            "edge_type": etype,
+            far: other,
+            f"{end}_names": _json_or_none(names),
+            f"{end}_types": _json_or_none(types),
+            "datasources": edge.get("datasources"),
+            "edge": edge,
+        })
     return out

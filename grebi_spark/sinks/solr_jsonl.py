@@ -9,8 +9,20 @@ id-valued strings the referenced node's *names* are indexed alongside
 
 from __future__ import annotations
 
+import json
+import math
+import os
+import re
+import sqlite3
+import struct
+from collections import Counter
+from contextlib import closing
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .kv import open_store
 
 
 def solr_key(col):
@@ -200,8 +212,52 @@ def solr_delta_docs(state) -> dict[str, DataFrame]:
 # delta-sized. A doc is live iff no tombstone with a HIGHER segment
 # number covers its id — exactly Lucene's deleted-docs semantics, and
 # the same LSM shape as compact_ann_index / compact_state.
+#
+# Requests are served from a sqlite file in the core root that holds the
+# live node docs in the shapes the routes read (Lucene's stored fields,
+# term dictionary and postings): ``doc`` (id, Spark-lowered id, types and
+# names as JSON, token count), ``name`` (one row per name, Spark-lowered,
+# with its length), ``field`` (node_id, field, value) for WHOLE_FIELD
+# filters and facets, ``post`` (tok, node_id, tf, dl) BM25 postings with
+# the one-row ``stats`` (n_docs, total_dl), and ``suggest``, the distinct
+# names. Every lowering and tokenizing happens in Spark at build time, so
+# the readers below compare stored strings only.
 
 _CORE_KINDS = ("nodes", "edges")
+CORE_DB = "serve.sqlite"
+
+# the serving tables, each with its columns in shard order
+_CORE_TABLES = {
+    "doc": "node_id TEXT, id_lower TEXT, types TEXT, names TEXT, dl INTEGER",
+    "name": "node_id TEXT, name TEXT, name_lower TEXT, len INTEGER",
+    "field": "node_id TEXT, field TEXT, value TEXT",
+    "post": "tok TEXT, node_id TEXT, tf INTEGER, dl INTEGER",
+}
+_CORE_SCHEMA = (
+    "CREATE TABLE doc (node_id TEXT PRIMARY KEY, id_lower TEXT, types TEXT,"
+    " names TEXT, dl INTEGER)",
+    "CREATE TABLE name (node_id TEXT, name TEXT, name_lower TEXT, len INTEGER)",
+    "CREATE TABLE field (node_id TEXT, field TEXT, value TEXT)",
+    "CREATE TABLE post (tok TEXT, node_id TEXT, tf INTEGER, dl INTEGER,"
+    " PRIMARY KEY (tok, node_id)) WITHOUT ROWID",
+    "CREATE TABLE suggest (name TEXT PRIMARY KEY, name_lower TEXT, len INTEGER)",
+    "CREATE TABLE stats (n_docs INTEGER, total_dl INTEGER)",
+)
+_CORE_INDEXES = (
+    "CREATE INDEX name_node ON name (node_id)",
+    "CREATE INDEX name_name ON name (name)",
+    "CREATE INDEX field_node ON field (node_id, field, value)",
+    "CREATE INDEX post_node ON post (node_id)",
+    "CREATE INDEX suggest_order ON suggest (len, name)",
+)
+_SUGGEST_ROWS = "SELECT name, min(name_lower), min(len) FROM {} GROUP BY name"
+# the doc header arrays, under names no escaped property key can take
+_HEADER_FIELDS = {"types": ":types", "datasources": ":datasources"}
+
+
+def core_db_path(root: str) -> str:
+    """The serving sqlite file of the core at ``root``."""
+    return os.path.join(root, CORE_DB)
 
 
 def _core_segments(spark, root: str, kind: str) -> list[int]:
@@ -215,13 +271,75 @@ def _core_segments(spark, root: str, kind: str) -> list[int]:
     return sorted(segs)
 
 
+def _name_tokens():
+    """The index-time token rule (the same as the query-time oracle
+    ``bm25_core_docs``): lowercase the name field, split on
+    non-alphanumeric runs, drop empties."""
+    return F.filter(
+        F.split(
+            F.lower(F.array_join(F.col("grebi__name"), " ")), "[^a-z0-9]+"
+        ),
+        lambda t: t != "",
+    )
+
+
+def _core_rows(docs: DataFrame) -> DataFrame:
+    """Node docs with every string the readers compare lowered or
+    tokenized by Spark."""
+    return docs.select(
+        F.col("grebi__nodeId").alias("node_id"),
+        F.lower("grebi__nodeId").alias("id_lower"),
+        F.col("grebi__type").alias("types"),
+        F.col("grebi__datasources").alias("datasources"),
+        F.col("grebi__name").alias("names"),
+        F.transform("grebi__name", lambda n: F.lower(n)).alias("names_lower"),
+        F.transform("grebi__name", lambda n: F.length(n)).alias("names_len"),
+        _name_tokens().alias("toks"),
+        "fields",
+    )
+
+
+def _core_table_rows(r):
+    """The serving-table rows of one ``_core_rows`` row."""
+    node, toks = r["node_id"], r["toks"]
+    yield "doc", (
+        node, r["id_lower"], json.dumps(r["types"]), json.dumps(r["names"]),
+        len(toks),
+    )
+    for name, lower, n in zip(r["names"], r["names_lower"], r["names_len"]):
+        if name is not None:
+            yield "name", (node, name, lower, n)
+    header = ((f, r[c]) for c, f in _HEADER_FIELDS.items())
+    for field, values in (*header, *(r["fields"] or {}).items()):
+        for v in values or ():
+            yield "field", (node, field, v)
+    for tok, tf in Counter(toks).items():
+        yield "post", (tok, node, tf, len(toks))
+
+
+def _stage_core_rows(docs: DataFrame, db_path: str, suffix: str) -> str:
+    """Write ``docs``' serving rows as executor-side shards; returns the
+    stage directory."""
+    import shutil
+
+    from .kv import _write_shards
+
+    stage = f"{db_path}.{suffix}"
+    shutil.rmtree(stage, ignore_errors=True)  # incl. stale .tmp-* attempts
+    os.makedirs(stage, exist_ok=True)
+    _write_shards(stage, "core", _CORE_TABLES, _core_rows(docs), _core_table_rows)
+    return stage
+
+
 def build_solr_core(merged, node_meta, edges, root: str) -> None:
     """Materialise the executed search core from scratch: node and edge
-    docs as segment 0, no tombstones, plus the nodes' BM25 POSTINGS
-    INDEX segment (tokenize-at-index-time — Lucene's index-vs-query
-    split; /search?rank=bm25 then probes postings instead of
-    re-tokenizing the corpus per request). Same doc rendering as the
+    docs as segment 0, no tombstones, plus the serving sqlite file
+    (``core_db_path``) over the node docs. Same doc rendering as the
     JSONL export (solr_node_docs / solr_edge_docs)."""
+    import shutil
+
+    from .kv import _load_shards
+
     spark = merged.sparkSession
     solr_node_docs(merged, node_meta).write.mode("overwrite").parquet(
         f"{root}/nodes/segments/seg=0"
@@ -229,10 +347,26 @@ def build_solr_core(merged, node_meta, edges, root: str) -> None:
     solr_edge_docs(edges).write.mode("overwrite").parquet(
         f"{root}/edges/segments/seg=0"
     )
-    # index the just-written segment (read back: cheaper than re-running
-    # the doc-render joins, and indexes exactly what the core stores)
-    docs0 = spark.read.parquet(f"{root}/nodes/segments/seg=0")
-    _write_index_segment(spark, root, 0, docs0, base_stats=(0, 0))
+    # serve what the core stores: the segment read back is cheaper than
+    # re-running the doc-render joins
+    db = core_db_path(root)
+    stage = _stage_core_rows(
+        spark.read.parquet(f"{root}/nodes/segments/seg=0"), db, "shards"
+    )
+    if os.path.exists(db):
+        os.remove(db)
+    with closing(sqlite3.connect(db)) as con:
+        for ddl in _CORE_SCHEMA:
+            con.execute(ddl)
+        _load_shards(con, stage, "core", _CORE_TABLES)
+        con.execute("INSERT INTO suggest " + _SUGGEST_ROWS.format("name"))
+        con.execute(
+            "INSERT INTO stats SELECT count(*), coalesce(sum(dl), 0) FROM doc"
+        )
+        for ddl in _CORE_INDEXES:
+            con.execute(ddl)
+        con.commit()
+    shutil.rmtree(stage, ignore_errors=True)
 
 
 def refresh_solr_core(spark, state, root: str) -> dict[str, int]:
@@ -242,11 +376,20 @@ def refresh_solr_core(spark, state, root: str) -> dict[str, int]:
     segments are untouched — the refresh I/O is delta-sized, the
     no-corpus-shuffle contract the graph verbs carry extends through
     the serving tier (the stored corpus is only broadcast-semi-probed
-    inside solr_delta_docs). Returns per-set applied counts; the suite
-    asserts read-back ≡ a from-scratch core of the new state."""
+    inside solr_delta_docs). The same delta is applied to the serving
+    sqlite file in ONE transaction — replaced and deleted docs out,
+    upserts in, ``suggest`` and ``stats`` rolled forward — so a reader
+    sees the refresh whole on its next request or not at all. Returns
+    per-set applied counts; the suite asserts read-back ≡ a
+    from-scratch core of the new state."""
+    import shutil
+
+    from .kv import _load_shards
+
     d = solr_delta_docs(state)
     segs = _core_segments(spark, root, "nodes")
-    if not segs:
+    db = core_db_path(root)
+    if not segs or not os.path.exists(db):
         raise ValueError(
             f"no core at {root} — refresh maintains an existing "
             "build_solr_core artifact"
@@ -269,13 +412,58 @@ def refresh_solr_core(spark, state, root: str) -> dict[str, int]:
             f"{root}/{kind}/tombstones/seg={new_seg}"
         )
         counts[f"{kind[:-1]}_upserts"] = ups.count()
-        counts[f"{kind[:-1]}_deletions"] = dels.count()
-    # delta-maintain the BM25 postings index alongside the doc segments
-    # (index the new segment's docs, roll the live stats forward); a
-    # pre-index core (no index dir) simply stays doc-only — the serving
-    # path falls back to query-time scoring there
-    if _index_segments(spark, root):
-        refresh_core_index(spark, root, new_seg)
+        if kind == "nodes":
+            node_ups = ups
+            deleted = [(r[0],) for r in dels.collect()]  # delta-sized
+            counts["node_deletions"] = len(deleted)
+        else:
+            counts["edge_deletions"] = dels.count()
+
+    stage = _stage_core_rows(node_ups, db, "refresh-shards")
+    con = sqlite3.connect(db, isolation_level=None)  # manual txn
+    try:
+        # staging happens outside the transaction: sqlite forbids ATTACH
+        # inside one
+        for table, cols in _CORE_TABLES.items():
+            con.execute(f"CREATE TEMP TABLE stage_{table} ({cols})")
+        _load_shards(con, stage, "core", _CORE_TABLES, prefix="stage_")
+        con.execute("CREATE TEMP TABLE stage_del (id TEXT)")
+        con.executemany("INSERT INTO stage_del VALUES (?)", deleted)
+        con.execute("INSERT INTO stage_del SELECT node_id FROM stage_doc")
+        gone = "(SELECT id FROM stage_del)"
+
+        con.execute("BEGIN")
+        n_gone, dl_gone = con.execute(
+            f"SELECT count(*), coalesce(sum(dl), 0) FROM doc WHERE node_id IN {gone}"
+        ).fetchone()
+        con.execute(
+            "CREATE TEMP TABLE gone_names AS"
+            f" SELECT DISTINCT name FROM name WHERE node_id IN {gone}"
+        )
+        for table in _CORE_TABLES:
+            con.execute(f"DELETE FROM {table} WHERE node_id IN {gone}")
+            con.execute(f"INSERT INTO {table} SELECT * FROM stage_{table}")
+        con.execute(
+            "DELETE FROM suggest WHERE name IN (SELECT name FROM gone_names)"
+            " AND NOT EXISTS (SELECT 1 FROM name n WHERE n.name = suggest.name)"
+        )
+        con.execute(
+            "INSERT OR IGNORE INTO suggest " + _SUGGEST_ROWS.format("stage_name")
+        )
+        con.execute(
+            "UPDATE stats SET"
+            " n_docs = n_docs - ? + (SELECT count(*) FROM stage_doc),"
+            " total_dl = total_dl - ? + (SELECT coalesce(sum(dl), 0) FROM stage_doc)",
+            (n_gone, dl_gone),
+        )
+        con.execute("COMMIT")
+    except Exception:
+        if con.in_transaction:
+            con.execute("ROLLBACK")
+        raise
+    finally:
+        con.close()
+    shutil.rmtree(stage, ignore_errors=True)
     return counts
 
 
@@ -284,7 +472,8 @@ def read_solr_core(spark, root: str, kind: str = "nodes"):
     (with its ordinal) and drop docs covered by a HIGHER-segment
     tombstone — Lucene's visibility rule. One anti-join against the
     (delta-sized) tombstone union; segment files are read as written,
-    no shuffle beyond the join."""
+    no shuffle beyond the join. Maintenance and the suite read the
+    core this way; requests read the serving sqlite file."""
     from functools import reduce
 
     segs = _core_segments(spark, root, kind)
@@ -318,106 +507,73 @@ def read_solr_core(spark, root: str, kind: str = "nodes"):
     return live.drop("__seg")
 
 
-def search_core_docs(
-    docs: DataFrame,
-    q: str,
-    page: int = 0,
-    size: int = 10,
-    type_filter: str | None = None,
-    facet_fields: tuple[str, ...] = (),
-    filters: tuple[tuple[str, tuple[str, ...], bool], ...] = (),
-    exclude_obsolete: bool = True,
-):
-    """Q6 over the MAINTAINED core's documents — the reference's actual
-    read path: GrebiApi's /search queries Solr, the incrementally
-    refreshed store (GrebiApi.java:185-227), not the graph build. Same
-    semantics as plans.graph_queries.search_nodes (id beats name
-    scoring, OR-within/AND-across WHOLE_FIELD filters, negation, the
-    always-on obsolete exclusion, multi-select faceting where tagged
-    filters are excluded from facet counts) — value-identical output,
-    suite-asserted — but every predicate reads the flat doc's own
-    ``fields`` map: a point filter needs no join against the merged
-    long table, which is exactly why the reference fronts its graph
-    with a search core."""
-    ql = (q or "").lower()
-    if type_filter:
-        docs = docs.filter(F.array_contains("grebi__type", type_filter))
-    id_hit = F.when(F.lower(F.col("grebi__nodeId")).contains(ql), 1000).otherwise(0)
-    name_hit = F.when(
-        F.exists("grebi__name", lambda n: F.lower(n).contains(ql)), 900
-    ).otherwise(0)
-    scored = docs.withColumn("score", id_hit + name_hit).filter(F.col("score") > 0)
-    base, paged = _apply_core_filters(
-        scored, filters, facet_fields, exclude_obsolete
-    )
-    page_df = (
-        paged.orderBy(F.desc("score"), "grebi__nodeId")
-        .offset(page * size)
-        .limit(size)
-        .select(
-            F.col("grebi__nodeId").alias("node_id"),
-            F.col("grebi__type").alias("types"),
-            F.col("grebi__name").alias("names"),
-            "score",
-        )
-    )
-    return page_df, _core_facets(base, facet_fields)
+# --- the serving read path: pure sqlite reads, no Spark -----------------------
 
 
-def _apply_one_core_filter(
-    df: DataFrame, prop: str, values: tuple[str, ...], negate: bool
-) -> DataFrame:
-    """One WHOLE_FIELD filter over a core doc frame (OR within values,
-    negation supported), reading the flat doc's own columns/fields map."""
-    if prop == "types":
-        vals = F.col("grebi__type")
-    elif prop == "datasources":
-        vals = F.col("grebi__datasources")
-    else:
-        vals = F.coalesce(
-            F.col("fields").getItem(prop.replace(":", "__")),
-            F.array().cast("array<string>"),
-        )
-    hit = F.arrays_overlap(vals, F.array(*[F.lit(v) for v in values]))
-    return df.filter(~hit if negate else hit)
-
-
-def _apply_core_filters(
-    scored: DataFrame,
+def _filter_conds(
+    type_filter: str | None,
     filters: tuple[tuple[str, tuple[str, ...], bool], ...],
     facet_fields: tuple[str, ...],
     exclude_obsolete: bool,
 ):
-    """(base, paged): multi-select faceting — filters on FACETED fields
-    are excluded from the facet-count frame (base) but applied to the
-    page frame (paged); the always-on obsolete exclusion applies to
-    both. Shared by the boost-ladder and BM25 rankings so the filter
-    semantics cannot drift between them."""
+    """(base, tagged) SQL conditions on a doc row ``h``, each a
+    ``(sql, params)`` pair. WHOLE_FIELD filters (GrebiSolrQuery.java:
+    109-140): OR within a filter's values, AND across filters, negation,
+    the always-on obsolete exclusion. Multi-select faceting: filters on
+    FACETED fields are ``tagged`` — applied to the page, left out of the
+    facet counts."""
+    base, tagged = [], []
+    if type_filter:
+        base.append((
+            "EXISTS (SELECT 1 FROM field f WHERE f.node_id = h.node_id"
+            " AND f.field = ':types' AND f.value = ?)",
+            (type_filter,),
+        ))
     all_filters = list(filters)
     if exclude_obsolete:
         all_filters.append(("ols:isObsolete", ("true",), True))
-    base = scored
     for prop, values, negate in all_filters:
-        if prop not in facet_fields:
-            base = _apply_one_core_filter(base, prop, values, negate)
-    paged = base
-    for prop, values, negate in all_filters:
-        if prop in facet_fields:
-            paged = _apply_one_core_filter(paged, prop, values, negate)
-    return base, paged
+        field = _HEADER_FIELDS.get(prop) or prop.replace(":", "__")
+        match = f"f.value IN ({', '.join(['?'] * len(values))})"
+        if negate:
+            # Spark's arrays_overlap is NULL, not false, for a field
+            # holding a null, so the negated filter drops that doc too
+            match += " OR f.value IS NULL"
+        cond = (
+            "EXISTS (SELECT 1 FROM field f WHERE f.node_id = h.node_id"
+            f" AND f.field = ? AND ({match}))"
+        )
+        (tagged if prop in facet_fields else base).append(
+            (("NOT " if negate else "") + cond, (field, *values))
+        )
+    return base, tagged
 
 
-def _core_facets(base: DataFrame, facet_fields: tuple[str, ...]):
-    core_col = {"types": "grebi__type", "datasources": "grebi__datasources"}
+def _where(conds) -> tuple[str, list]:
+    return (
+        " AND ".join(c for c, _ in conds) or "1",
+        [p for _, ps in conds for p in ps],
+    )
+
+
+def _facet_counts(con, facet_fields, ids_sql: str, params) -> dict:
+    """Per faceted header field, value -> count over the doc ids
+    ``ids_sql`` selects."""
     return {
-        f: base.select(F.explode(core_col[f]).alias("value")).groupBy("value").count()
+        f: dict(
+            con.execute(
+                f"SELECT value, count(*) FROM field WHERE field = ?"
+                f" AND node_id IN ({ids_sql}) GROUP BY value",
+                (_HEADER_FIELDS[f], *params),
+            ).fetchall()
+        )
         for f in facet_fields
-        if f in core_col
+        if f in _HEADER_FIELDS
     }
 
 
-def search_core_docs_bm25(
-    docs: DataFrame,
+def search_core_docs(
+    root: str,
     q: str,
     page: int = 0,
     size: int = 10,
@@ -425,77 +581,194 @@ def search_core_docs_bm25(
     facet_fields: tuple[str, ...] = (),
     filters: tuple[tuple[str, tuple[str, ...], bool], ...] = (),
     exclude_obsolete: bool = True,
-    index_root: str | None = None,
-):
-    """Q6 over the maintained core with Lucene's ACTUAL ranking model:
-    same WHOLE_FIELD filter / multi-select facet semantics as
-    ``search_core_docs`` (shared ``_apply_core_filters``), but
-    relevance is Okapi BM25 over the name field instead of the id/name
-    boost ladder. The facade serves this under
-    ``/search?...&rank=bm25``. The query is tokenized by the same
-    lowercase/non-alphanumeric rule the index uses; duplicate terms are
-    dropped (first-seen order kept — a repeated word in the query box
-    must not double-count its clause or silently eat the clause
-    budget), then at most 8 terms participate (Solr's edismax clause
-    bound, kept small so the fixed-order score sum stays engine-exact).
+) -> tuple[list[dict], dict[str, dict]]:
+    """Q6 over the MAINTAINED core — the reference's actual read path:
+    GrebiApi's /search queries Solr, the incrementally refreshed store
+    (GrebiApi.java:185-227), not the graph build. Same semantics as
+    plans.graph_queries.search_nodes (id beats name scoring, WHOLE_FIELD
+    filters, the always-on obsolete exclusion, multi-select facets),
+    value-identical output, suite-asserted: a substring test is
+    ``instr`` on the Spark-lowered strings, each name tested on its own.
+    Returns (page rows, facet field -> value -> count)."""
+    con = open_store(core_db_path(root))
+    ql = (q or "").lower()
+    base, tagged = _filter_conds(type_filter, filters, facet_fields, exclude_obsolete)
 
-    With ``index_root`` (the core's root — the facade passes it),
-    scoring probes the STORED postings index (``bm25_index_scored``):
-    no request-time tokenize, no corpus-proportional work — Lucene's
-    actual index-vs-query split. Without it, scoring falls back to
-    query-time recompute over ``docs`` (``bm25_core_docs``), the
-    pre-index behavior kept for doc-only cores."""
-    import re as _re
+    def hits(cols: str, conds):
+        where, params = _where(conds)
+        return (
+            f"SELECT {cols} FROM (SELECT d.node_id, d.types, d.names,"
+            " CASE WHEN instr(d.id_lower, ?) > 0 THEN 1000 ELSE 0 END"
+            " + CASE WHEN d.node_id IN (SELECT node_id FROM name"
+            " WHERE instr(name_lower, ?) > 0) THEN 900 ELSE 0 END AS score"
+            f" FROM doc d) h WHERE h.score > 0 AND {where}",
+            [ql, ql, *params],
+        )
 
+    sql, params = hits("h.node_id, h.types, h.names, h.score", base + tagged)
+    rows = con.execute(
+        f"{sql} ORDER BY h.score DESC, h.node_id LIMIT ? OFFSET ?",
+        (*params, size, page * size),
+    ).fetchall()
+    page_rows = [
+        {"node_id": n, "types": json.loads(t), "names": json.loads(m), "score": s}
+        for n, t, m, s in rows
+    ]
+    return page_rows, _facet_counts(con, facet_fields, *hits("h.node_id", base))
+
+
+def _strict_log(x: float) -> float:
+    """Natural log exactly as fdlibm's ``__ieee754_log`` computes it —
+    Java's ``StrictMath.log``, which Spark's ``log`` calls. The C
+    library's log (Python's ``math.log``) differs from it in the last
+    bit for about one argument in twelve."""
+    hx = struct.unpack("<q", struct.pack("<d", x))[0] >> 32
+    k = 0
+    if hx < 0x00100000:  # zero, negative or subnormal
+        if x == 0.0:
+            return -math.inf
+        if hx < 0:
+            return math.nan
+        k -= 54
+        x *= 1.80143985094819840000e16  # 2**54
+        hx = struct.unpack("<q", struct.pack("<d", x))[0] >> 32
+    if hx >= 0x7FF00000:
+        return x + x
+    k += (hx >> 20) - 1023
+    hx &= 0x000FFFFF
+    i = (hx + 0x95F64) & 0x100000
+    lo = struct.unpack("<q", struct.pack("<d", x))[0] & 0xFFFFFFFF
+    x = struct.unpack("<d", struct.pack("<q", ((hx | (i ^ 0x3FF00000)) << 32) | lo))[0]
+    k += i >> 20
+    f = x - 1.0
+    ln2_hi, ln2_lo = 6.93147180369123816490e-01, 1.90821492927058770002e-10
+    dk = float(k)
+    if (0x000FFFFF & (2 + hx)) < 3:  # |f| < 2**-20
+        if f == 0.0:
+            return 0.0 if k == 0 else dk * ln2_hi + dk * ln2_lo
+        r = f * f * (0.5 - 0.33333333333333333 * f)
+        return f - r if k == 0 else dk * ln2_hi - ((r - dk * ln2_lo) - f)
+    s = f / (2.0 + f)
+    z = s * s
+    i = hx - 0x6147A
+    w = z * z
+    j = 0x6B851 - hx
+    t1 = w * (3.999999999940941908e-01 + w * (2.222219843214978396e-01
+                                              + w * 1.531383769920937332e-01))
+    t2 = z * (6.666666666666735130e-01 + w * (2.857142874366239149e-01
+              + w * (1.818357216161805012e-01 + w * 1.479819860511658591e-01)))
+    r = t2 + t1
+    if (i | j) > 0:
+        hfsq = 0.5 * f * f
+        if k == 0:
+            return f - (hfsq - s * (hfsq + r))
+        return dk * ln2_hi - ((hfsq - (s * (hfsq + r) + dk * ln2_lo)) - f)
+    if k == 0:
+        return f - s * (f - r)
+    return dk * ln2_hi - ((s * (f - r) - dk * ln2_lo) - f)
+
+
+def _round_half_up(x: float, digits: int) -> float:
+    """Spark's ``round`` of a double: HALF_UP on the shortest decimal
+    that reads back as ``x`` (Java's ``BigDecimal.valueOf``), where
+    Python's ``round`` goes by the binary value (1.00005 -> 1.0)."""
+    return float(
+        Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits), rounding=ROUND_HALF_UP)
+    )
+
+
+def _query_terms(q: str | None) -> tuple[str, ...]:
+    """The query's BM25 terms: the index's token rule, duplicates
+    dropped in first-seen order, at most 8 (Solr's edismax clause
+    bound)."""
     seen: dict[str, None] = {}
-    for t in _re.split(r"[^a-z0-9]+", (q or "").lower()):
+    for t in re.split(r"[^a-z0-9]+", (q or "").lower()):
         if t:
             seen.setdefault(t)
-    terms = tuple(seen)[:8]
-    base, paged = _apply_core_filters(
-        docs if not type_filter
-        else docs.filter(F.array_contains("grebi__type", type_filter)),
-        filters,
-        facet_fields,
-        exclude_obsolete,
-    )
+    return tuple(seen)[:8]
+
+
+def bm25_core_scores(
+    root: str, terms: tuple[str, ...], k1: float = 1.2, b: float = 0.75
+) -> dict[str, float]:
+    """node_id -> Okapi BM25 score, rounded to 4 places, for the live
+    docs matching at least one of ``terms`` — read from the stored
+    postings and stats row, nothing corpus-proportional per request.
+    Value-identical to the Spark recompute ``bm25_core_docs``: per term
+    the same expression in the same evaluation order, ``_strict_log``
+    for Spark's log, a fixed-order sum over the terms, then Spark's
+    HALF_UP rounding. An empty ``terms`` matches nothing."""
+    con = open_store(core_db_path(root))
+    n_docs, total_dl = con.execute("SELECT n_docs, total_dl FROM stats").fetchone()
+    weights: dict[str, list[float]] = {}
+    for i, tok in enumerate(terms):
+        posting = con.execute(
+            "SELECT node_id, tf, dl FROM post WHERE tok = ?", (tok,)
+        ).fetchall()
+        df = len(posting)
+        idf = _strict_log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+        for node, tf, dl in posting:
+            w = (
+                idf * tf * (k1 + 1.0)
+                / (tf + k1 * (1.0 - b + b * dl * n_docs / total_dl))
+            )
+            weights.setdefault(node, [0.0] * len(terms))[i] = w
+    scores = {}
+    for node, ws in weights.items():
+        s = 0.0
+        for w in ws:
+            s = s + w
+        scores[node] = _round_half_up(s, 4)
+    return scores
+
+
+def search_core_docs_bm25(
+    root: str,
+    q: str,
+    page: int = 0,
+    size: int = 10,
+    type_filter: str | None = None,
+    facet_fields: tuple[str, ...] = (),
+    filters: tuple[tuple[str, tuple[str, ...], bool], ...] = (),
+    exclude_obsolete: bool = True,
+) -> tuple[list[dict], dict[str, dict]]:
+    """Q6 over the maintained core with Lucene's ACTUAL ranking model:
+    same WHOLE_FIELD filter / multi-select facet semantics as
+    ``search_core_docs``, but relevance is Okapi BM25 over the name
+    field (``bm25_core_scores``) instead of the id/name boost ladder.
+    The facade serves this under ``/search?...&rank=bm25``. Lucene
+    semantics: BM25 statistics come from the whole live corpus, so a
+    filter narrows the result set but does not change scores. Facet
+    counts cover the matching docs; a query with no terms (only
+    punctuation) matches nothing and counts facets over every doc the
+    filters keep."""
+    con = open_store(core_db_path(root))
+    base, tagged = _filter_conds(type_filter, filters, facet_fields, exclude_obsolete)
+    terms = _query_terms(q)
     if not terms:
-        empty = paged.select(
-            F.col("grebi__nodeId").alias("node_id"),
-            F.col("grebi__type").alias("types"),
-            F.col("grebi__name").alias("names"),
-            F.lit(0.0).alias("score"),
-        ).limit(0)
-        return empty, _core_facets(base, facet_fields)
-    # Lucene semantics: BM25 statistics (df/idf/avgdl) come from the
-    # INDEX — the whole live corpus — never from the filtered subset;
-    # an fq filter narrows the result set but does not change scores.
-    if index_root is not None and _index_segments(
-        docs.sparkSession, index_root
-    ):
-        scored = bm25_index_scored(docs.sparkSession, index_root, terms)
-    else:
-        scored = bm25_core_docs(docs, terms, persist=False)
-    meta = paged.select(
-        F.col("grebi__nodeId").alias("node_id"),
-        F.col("grebi__type").alias("types"),
-        F.col("grebi__name").alias("names"),
+        where, params = _where(base)
+        return [], _facet_counts(
+            con, facet_fields, f"SELECT h.node_id FROM doc h WHERE {where}", params
+        )
+    scores = bm25_core_scores(root, terms)
+    matched = (
+        "h.node_id IN (SELECT value FROM json_each(?))",
+        (json.dumps(list(scores)),),
     )
-    page_df = (
-        scored.join(meta, "node_id")  # inner: filters narrow the page
-        .orderBy(F.desc("score"), "node_id")
-        .offset(page * size)
-        .limit(size)
-        .select("node_id", "types", "names", "score")
+    where, params = _where([matched, *base, *tagged])
+    kept = con.execute(
+        f"SELECT h.node_id, h.types, h.names FROM doc h WHERE {where}", params
+    ).fetchall()
+    kept.sort(key=lambda r: (-scores[r[0]], r[0]))
+    page_rows = [
+        {"node_id": n, "types": json.loads(t), "names": json.loads(m),
+         "score": scores[n]}
+        for n, t, m in kept[page * size:(page + 1) * size]
+    ]
+    where, params = _where([matched, *base])
+    return page_rows, _facet_counts(
+        con, facet_fields, f"SELECT h.node_id FROM doc h WHERE {where}", params
     )
-    # facet counts cover MATCHING docs (q hit >=1 term), mirroring the
-    # boost-ladder path's score>0 restriction
-    matched = base.join(
-        scored.select("node_id"),
-        base["grebi__nodeId"] == F.col("node_id"),
-        "left_semi",
-    )
-    return page_df, _core_facets(matched, facet_fields)
 
 
 def bm25_core_docs(
@@ -503,15 +776,12 @@ def bm25_core_docs(
     terms: tuple[str, ...],
     k1: float = 1.2,
     b: float = 0.75,
-    persist: bool = True,
 ) -> DataFrame:
-    """Okapi BM25 over the MAINTAINED core's live documents — Solr's
-    actual ranking model (Lucene's BM25Similarity, the default since
-    Solr 6), served from the same segment/tombstone store /search
-    filters against. ``docs`` is ``read_solr_core``'s live view, so
-    df/idf/avgdl are computed from the POST-refresh doc set: a stale
-    segment or an uncovered tombstone shifts the corpus statistics and
-    every score with them — the suite's oracle recomputes from scratch.
+    """Okapi BM25 recomputed in Spark from the core's live documents
+    (``read_solr_core``) — the oracle the served scores
+    (``bm25_core_scores``) are checked against. Lucene's BM25Similarity,
+    Solr's default since Solr 6: df/idf/avgdl come from the whole live
+    doc set.
 
     Token rule (oracle-mirrorable): lowercase the name field, split on
     non-alphanumeric runs, drop empties. All scoring is JVM-side
@@ -535,10 +805,6 @@ def bm25_core_docs(
         F.col("grebi__nodeId").alias("node_id"), toks.alias("toks")
     )
     lens = base.select("node_id", F.size("toks").alias("dl"))
-    if persist:  # shares the doc scan between stats and the probe join;
-        # per-request callers (the facade) pass False to avoid stacking
-        # persisted frames across requests
-        lens = lens.persist()
     stats = lens.agg(
         F.count("*").alias("n_docs"),
         F.sum("dl").cast("long").alias("total_dl"),
@@ -592,282 +858,28 @@ def bm25_core_docs(
     return per_term.select("node_id", F.round(score, 4).alias("score"))
 
 
-# --- the BM25 postings index: Lucene's index-vs-query split -----------------
-#
-# Lucene tokenizes at INDEX time — a query probes the term dictionary
-# and posting lists; it never re-reads stored documents to score
-# (GrebiSolrClient.java:105-147 sends edismax queries to exactly such
-# an index). The maintained core mirrors that split: each doc segment
-# gets a postings segment (tok, node_id, tf, dl — dl denormalized so a
-# term probe is self-contained), a lens segment (node_id, dl — includes
-# zero-token docs, which count toward n_docs/avgdl), and a one-row
-# LIVE-corpus stats snapshot (n_docs, total_dl) maintained incrementally
-# at refresh time. A /search?rank=bm25 request then reads: postings
-# filtered to the query terms (predicate pushdown + tok-sorted row
-# groups — a probe-sized scan), the delta-sized tombstones (broadcast),
-# and one stats row. Nothing per-request is proportional to the corpus.
-
-
-def _name_tokens():
-    """The index-time token rule (shared verbatim with the query-time
-    fallback ``bm25_core_docs`` so the two paths cannot drift):
-    lowercase the name field, split on non-alphanumeric runs, drop
-    empties."""
-    return F.filter(
-        F.split(
-            F.lower(F.array_join(F.col("grebi__name"), " ")), "[^a-z0-9]+"
-        ),
-        lambda t: t != "",
-    )
-
-
-def _index_rows(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(postings, lens) for one segment's node docs. postings = one row
-    per (doc, distinct token): (tok, node_id, tf, dl); lens =
-    (node_id, dl) for every doc, tokens or not."""
-    base = docs.select(
-        F.col("grebi__nodeId").alias("node_id"), _name_tokens().alias("toks")
-    )
-    lens = base.select("node_id", F.size("toks").alias("dl"))
-    postings = (
-        base.select(
-            "node_id", F.size("toks").alias("dl"),
-            F.explode("toks").alias("tok"),
-        )
-        .groupBy("tok", "node_id", "dl")
-        .agg(F.count("*").alias("tf"))
-    )
-    return postings, lens
-
-
-def _write_index_segment(
-    spark, root: str, seg: int, docs: DataFrame, base_stats: tuple[int, int]
-) -> None:
-    """Write segment ``seg``'s postings + lens, and the cumulative LIVE
-    stats snapshot as of this segment: ``base_stats`` (n_docs, total_dl
-    of the live corpus EXCLUDING this segment — the refresh caller has
-    already subtracted the docs this segment's tombstones kill) plus
-    this segment's own aggregates. Postings are RANGE-partitioned and
-    sorted by tok — each file covers a disjoint token range, so a
-    query-term probe prunes whole files and row groups via parquet
-    min/max stats (the term-dictionary access pattern), and the write
-    parallelizes instead of funnelling through one task."""
-    post, lens = _index_rows(docs)
-    (
-        post.repartitionByRange(F.col("tok"))
-        .sortWithinPartitions("tok")
-        .write.mode("overwrite")
-        .parquet(f"{root}/nodes/index/postings/seg={seg}")
-    )
-    lens.write.mode("overwrite").parquet(f"{root}/nodes/index/lens/seg={seg}")
-    added = spark.read.parquet(f"{root}/nodes/index/lens/seg={seg}").agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("dl"),
-    ).collect()[0]
-    stats = spark.createDataFrame(
-        [(base_stats[0] + added["n"], base_stats[1] + added["dl"])],
-        "n_docs bigint, total_dl bigint",
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        f"{root}/nodes/index/stats/seg={seg}"
-    )
-
-
-def _index_segments(spark, root: str) -> list[int]:
-    from ..fsutil import hadoop_ls
-
-    segs = []
-    for st in hadoop_ls(
-        spark, f"{root}/nodes/index/postings", dirs_only=True
-    ):
-        name = st.getPath().getName()
-        if name.startswith("seg="):
-            segs.append(int(name.split("=", 1)[1]))
-    return sorted(segs)
-
-
-def _core_tombstones(spark, root: str, kind: str = "nodes") -> DataFrame | None:
-    """(id, __tseg) union of every tombstone segment — the delta-sized
-    kill list ``read_solr_core`` and the postings probe both apply."""
-    from functools import reduce
-
-    segs = _core_segments(spark, root, kind)
-    tombs = [
-        spark.read.parquet(f"{root}/{kind}/tombstones/seg={s}").withColumn(
-            "__tseg", F.lit(s)
-        )
-        for s in segs
-        if s > 0
-    ]
-    if not tombs:
-        return None
-    return reduce(lambda a, b: a.unionByName(b), tombs)
-
-
-def _index_live_lens(spark, root: str, upto_seg: int) -> DataFrame:
-    """(node_id, dl) of the docs LIVE as of segment ``upto_seg``
-    (exclusive of any later segment/tombstone): lens segments ≤ upto
-    minus docs a higher tombstone ≤ upto covers."""
-    from functools import reduce
-
-    lens = reduce(
-        lambda a, b: a.unionByName(b),
-        [
-            spark.read.parquet(
-                f"{root}/nodes/index/lens/seg={s}"
-            ).withColumn("__seg", F.lit(s))
-            for s in _index_segments(spark, root)
-            if s <= upto_seg
-        ],
-    )
-    tomb = _core_tombstones(spark, root, "nodes")
-    if tomb is not None:
-        tomb = tomb.filter(F.col("__tseg") <= upto_seg)
-        lens = lens.join(
-            F.broadcast(tomb),
-            (lens["node_id"] == tomb["id"]) & (tomb["__tseg"] > lens["__seg"]),
-            "left_anti",
-        )
-    return lens.select("node_id", "dl")
-
-
-def refresh_core_index(spark, root: str, new_seg: int) -> None:
-    """Delta-maintain the postings index for doc segment ``new_seg``
-    (already written, tombstones included): index the new segment's
-    docs, and roll the live stats snapshot forward — new = old − killed
-    + added, where killed = the previously-live docs this refresh's
-    tombstones cover. The killed lookup is one narrow (node_id, dl)
-    scan semi-joined against the delta-sized tombstone ids — per
-    REFRESH, not per request; requests never touch the corpus."""
-    prev = [s for s in _index_segments(spark, root) if s < new_seg]
-    if not prev:
-        raise ValueError(
-            f"no postings index under {root} — build_solr_core creates it"
-        )
-    old = spark.read.parquet(
-        f"{root}/nodes/index/stats/seg={max(prev)}"
-    ).collect()[0]
-    new_tomb = spark.read.parquet(
-        f"{root}/nodes/tombstones/seg={new_seg}"
-    ).select("id")
-    killed = (
-        _index_live_lens(spark, root, upto_seg=max(prev))
-        .join(F.broadcast(new_tomb), F.col("node_id") == F.col("id"),
-              "left_semi")
-        .agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("dl"),
-        )
-        .collect()[0]
-    )
-    docs = spark.read.parquet(f"{root}/nodes/segments/seg={new_seg}")
-    _write_index_segment(
-        spark, root, new_seg, docs,
-        base_stats=(old["n_docs"] - killed["n"], old["total_dl"] - killed["dl"]),
-    )
-
-
-def bm25_index_scored(
-    spark,
-    root: str,
-    terms: tuple[str, ...],
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """(node_id, score) for ``terms`` served FROM THE STORED INDEX —
-    the per-request plan Lucene actually runs: postings filtered to the
-    query terms (pushdown-pruned scan), tombstone visibility as a
-    broadcast anti-join (delta-sized), per-term df counted over the
-    probe itself (exact over live docs), and the one-row stored stats
-    snapshot. Identical scores to ``bm25_core_docs`` over the live doc
-    set (same formula, same fixed-order sum — suite- and
-    oracle-asserted); no request-time work is corpus-proportional.
-    An EMPTY term tuple matches nothing (zero-clause Lucene query),
-    not an error."""
-    from functools import reduce
-
-    if not terms:
-        return spark.createDataFrame([], "node_id string, score double")
-    segs = _index_segments(spark, root)
-    if not segs:
-        raise ValueError(f"no postings index under {root}")
-    post = reduce(
-        lambda a, b: a.unionByName(b),
-        [
-            spark.read.parquet(f"{root}/nodes/index/postings/seg={s}")
-            .filter(F.col("tok").isin(*terms))
-            .withColumn("__seg", F.lit(s))
-            for s in segs
-        ],
-    )
-    tomb = _core_tombstones(spark, root, "nodes")
-    if tomb is not None:
-        post = post.join(
-            F.broadcast(tomb),
-            (post["node_id"] == tomb["id"]) & (tomb["__tseg"] > post["__seg"]),
-            "left_anti",
-        )
-    dfreq = post.groupBy("tok").agg(F.count_distinct("node_id").alias("df"))
-    stats = spark.read.parquet(f"{root}/nodes/index/stats/seg={max(segs)}")
-    w = (
-        post.join(F.broadcast(dfreq), "tok")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(
-                (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1.0
-            ),
-        )
-        .withColumn(
-            "w",
-            F.col("idf")
-            * F.col("tf")
-            * (k1 + 1.0)
-            / (
-                F.col("tf")
-                + k1
-                * (
-                    1.0
-                    - b
-                    + b * F.col("dl") * F.col("n_docs") / F.col("total_dl")
-                )
-            ),
-        )
-    )
-    per_term = w.groupBy("node_id").agg(
-        *[
-            F.coalesce(
-                F.sum(F.when(F.col("tok") == t, F.col("w"))), F.lit(0.0)
-            ).alias(f"w_{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
-    score = F.lit(0.0)
-    for i in range(len(terms)):
-        score = score + F.col(f"w_{i}")
-    return per_term.select("node_id", F.round(score, 4).alias("score"))
-
-
-def suggest_core_docs(docs: DataFrame, q: str, size: int = 10) -> DataFrame:
-    """Q7 autocomplete over the maintained core's name field — the
+def suggest_core_docs(root: str, q: str, size: int = 10) -> list[str]:
+    """Q7 autocomplete over the maintained core's names — the
     engine-side twin of the exported autocomplete core's suggester
-    (GrebiApi.java:228), same ranking as the frame-backed suggest."""
-    ql = (q or "").lower()
-    return (
-        docs.select(F.explode("grebi__name").alias("name"))
-        .filter(F.lower(F.col("name")).startswith(ql))
-        .distinct()
-        .orderBy(F.length("name"), "name")
-        .limit(size)
-    )
+    (GrebiApi.java:228): distinct names whose Spark-lowered form starts
+    with the lowered ``q``, shortest first, then by name."""
+    return [
+        r[0]
+        for r in open_store(core_db_path(root)).execute(
+            "SELECT name FROM suggest WHERE instr(name_lower, ?) = 1"
+            " ORDER BY len, name LIMIT ?",
+            ((q or "").lower(), size),
+        )
+    ]
 
 
 def compact_solr_core(spark, root: str) -> int:
     """Segment merge (Lucene's background compaction): fold every
     segment's live docs into a fresh segment 0 and drop the tombstones.
     Returns the number of segments merged away. Content-identity
-    (read_solr_core before == after) is asserted by the suite.
+    (read_solr_core before == after) is asserted by the suite; the
+    serving sqlite file already holds exactly the live docs and is left
+    as it is.
 
     In-flight-writer audit (the prune_state_versions race family): this
     sweep deletes the segments/tombstones dirs wholesale and rebuilds
@@ -876,10 +888,9 @@ def compact_solr_core(spark, root: str) -> int:
     between delete and rename and lose it. Core maintenance (refresh +
     compact) must be serialized by the caller (one maintenance loop per
     core), which matches the suite's and the facade's usage; concurrent
-    READERS are safe (they resolve the segment list per request and
-    read immutable files)."""
+    READERS are safe (they read the serving file, which compaction does
+    not touch)."""
     merged_away = 0
-    compacted_nodes = False
     for kind in _CORE_KINDS:
         segs = _core_segments(spark, root, kind)
         if len(segs) <= 1:
@@ -898,17 +909,6 @@ def compact_solr_core(spark, root: str) -> int:
             jvm.org.apache.hadoop.fs.Path(f"{root}/{kind}/segments/seg=0"),
         )
         merged_away += len(segs) - 1
-        compacted_nodes = compacted_nodes or kind == "nodes"
-    # rebuild the postings index to match the compacted doc store (one
-    # tokenize pass — compaction is already a corpus-sized rewrite)
-    if compacted_nodes and _index_segments(spark, root):
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/nodes/index"), True)
-        docs0 = spark.read.parquet(f"{root}/nodes/segments/seg=0")
-        _write_index_segment(spark, root, 0, docs0, base_stats=(0, 0))
     return merged_away
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator
 
 import pandas as pd
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import INGESTED
-from . import canonical_props_json, flatten_entity, render_scalar
+from . import flatten_entity, render_scalar
 
 
 @dataclass(frozen=True)

@@ -4,7 +4,6 @@ J6 _refs attachment."""
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from grebi_spark.config import SubgraphConfig

@@ -4,7 +4,6 @@ notebook) run against a fixture graph through the graph query layer."""
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from grebi_spark.config import SubgraphConfig
 from grebi_spark.pipeline import build_graph

@@ -423,7 +423,7 @@ def test_refresh_kv_store_equals_rebuild(tri, tmp_path):
         con = sqlite3.connect(path)
         out = {
             t: sorted(con.execute(f"SELECT * FROM {t}").fetchall())
-            for t in ("kv", "alias", "edge")
+            for t in ("kv", "alias", "node", "edge")
         }
         con.close()
         return out
@@ -565,7 +565,7 @@ def test_stream_maintenance_refreshes_serving_store_per_fold(spark, sf_dir, tmp_
         con = sqlite3.connect(path)
         out = {
             t: sorted(con.execute(f"SELECT * FROM {t}").fetchall())
-            for t in ("kv", "alias", "edge")
+            for t in ("kv", "alias", "node", "edge")
         }
         con.close()
         return out
@@ -606,7 +606,7 @@ def test_refresh_kv_store_after_remove(tri, tmp_path):
         con = sqlite3.connect(path)
         out = {
             t: sorted(con.execute(f"SELECT * FROM {t}").fetchall())
-            for t in ("kv", "alias", "edge")
+            for t in ("kv", "alias", "node", "edge")
         }
         con.close()
         return out
@@ -642,7 +642,7 @@ def test_refresh_kv_store_after_update(tri, tmp_path):
         con = sqlite3.connect(path)
         out = {
             t: sorted(con.execute(f"SELECT * FROM {t}").fetchall())
-            for t in ("kv", "alias", "edge")
+            for t in ("kv", "alias", "node", "edge")
         }
         con.close()
         return out
@@ -739,6 +739,7 @@ def test_executed_solr_core_refresh_equals_rebuild(spark, tri, tmp_path):
     from grebi_spark.sinks.solr_jsonl import (
         build_solr_core,
         compact_solr_core,
+        core_db_path,
         read_solr_core,
         refresh_solr_core,
     )
@@ -778,6 +779,22 @@ def test_executed_solr_core_refresh_equals_rebuild(spark, tri, tmp_path):
         assert js(read_solr_core(spark, root, kind)) == js(
             read_solr_core(spark, scratch_root, kind)
         ), f"refreshed {kind} core != from-scratch core"
+
+    # the serving file: every table equals the from-scratch one
+    import sqlite3
+
+    def dump(r):
+        con = sqlite3.connect(core_db_path(r))
+        out = {
+            t: sorted(con.execute(f"SELECT * FROM {t}").fetchall(), key=repr)
+            for t in ("doc", "name", "field", "post", "suggest", "stats")
+        }
+        con.close()
+        return out
+
+    served = dump(root)
+    assert served == dump(scratch_root)
+    assert all(served.values())
 
     # a search served from the refreshed core equals one from scratch:
     # name-match filter + type facet, the search_nodes shape

@@ -1,7 +1,6 @@
 """Prefix normalisation: longest-match semantics, both physical modes."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from grebi_spark.operators import normalise as N
 from grebi_spark.operators.normalise import PrefixMap, normalise_prefixes

@@ -1,7 +1,6 @@
 """Property-based invariants (hypothesis): the Spark expressions must
 agree with straightforward Python reimplementations on arbitrary input."""
 
-import re
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F

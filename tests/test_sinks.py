@@ -6,7 +6,6 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from grebi_spark.operators.merge import node_table
 from grebi_spark.sinks.kv import kv_alias_table, kv_node_table, resolve, write_kv
 from grebi_spark.sinks.neo4j_csv import (
     neo4j_edge_rows,
