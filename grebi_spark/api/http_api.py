@@ -23,9 +23,10 @@ builds and never from the ETL engine, every store-backed route reads
 the subgraph's built stores with plain sqlite reads — no Spark job runs
 on the request path. Node pages, edge pages and /resolve read the KV
 store (``sinks.kv.build_kv_store``); /search (boost ladder or
-``rank=bm25``) and /suggest read the MAINTAINED search core
-(``sinks.solr_jsonl.build_solr_core`` / ``refresh_solr_core``), so a
-maintenance fold shows on the next request. Each route has that one
+``rank=bm25``) and /suggest read the executed search core
+(``sinks.solr_jsonl.build_solr_core``). Rebuilding either store swaps a
+new file onto its path, so a maintenance verb shows on the next request
+without restarting the server. Each route has that one
 read path; the frame implementations in ``plans.graph_queries`` are the
 oracles the suite checks the stores against. /stats, /collections and
 the summary routes aggregate the built frames.
@@ -116,12 +117,11 @@ class GrebiApiServer:
         shape: RocksDB point reads, no query engine on the hot path).
 
         ``solr_cores`` maps every subgraph name → its executed search
-        core root (``sinks.solr_jsonl.build_solr_core`` /
-        ``refresh_solr_core``): /search and /suggest read the core's
-        serving file, the reference's actual read path
-        (GrebiApi.java:185-227 queries Solr, the incrementally
-        refreshed store, never the graph build) — a maintenance fold +
-        ``refresh_solr_core`` changes what /search returns with no frame
+        core root (``sinks.solr_jsonl.build_solr_core``): /search and
+        /suggest read the core's serving file, the reference's actual
+        read path (GrebiApi.java:185-227 queries Solr, never the graph
+        build) — a maintenance verb followed by a rebuild of both stores
+        changes what every store-backed route returns with no frame
         rebuild. A subgraph without both stores raises ValueError."""
         self.graphs = graphs
         self.kv_stores = kv_stores or {}

@@ -5,10 +5,7 @@ counts, per-type counts, the distinct name set, the distinct id set, and a
 metadata.jsonl side table (04_index/grebi_index/src/main.rs:45-245).
 
 Spark design: four small aggregate jobs over one cached merged DataFrame —
-each is a map-side-combined hash aggregate; no custom code. Every
-aggregate is exposed as a per-frame helper so the incremental path
-(incremental.py) can run the SAME aggregate over a delta frame and apply
-it additively to the stored counts instead of re-scanning the corpus.
+each is a map-side-combined hash aggregate; no custom code.
 """
 
 from __future__ import annotations
@@ -35,12 +32,12 @@ class GraphIndex:
 
 
 def prop_counts_of(merged: DataFrame) -> DataFrame:
-    """(prop_key, n_values) row counts — additive across disjoint frames."""
+    """(prop_key, n_values) row counts."""
     return merged.groupBy("prop_key").agg(F.count("*").alias("n_values"))
 
 
 def edge_prop_counts_of(merged: DataFrame) -> DataFrame:
-    """(prop_key, n_values) over reified value_props keys — additive."""
+    """(prop_key, n_values) over reified value_props keys."""
     return (
         merged.filter(F.col("value_props").isNotNull())
         .select(
@@ -54,9 +51,7 @@ def edge_prop_counts_of(merged: DataFrame) -> DataFrame:
 
 
 def type_counts_of(merged: DataFrame) -> DataFrame:
-    """(type, n_nodes) — distinct (node_id, type) within the frame.
-    Additive across frames with DISJOINT node_id sets (the incremental
-    path's unchanged/re-merged split is clique-granular, so it is)."""
+    """(type, n_nodes) — distinct (node_id, type) within the frame."""
     return (
         merged.filter(F.col("prop_key") == "grebi:type")
         .select("node_id", F.col("value").alias("type"))
@@ -66,31 +61,8 @@ def type_counts_of(merged: DataFrame) -> DataFrame:
     )
 
 
-def name_counts_of(merged: DataFrame) -> DataFrame:
-    """(name, n) row counts over the name props — the refcounted form of
-    the distinct-name index, additive across disjoint frames; the name
-    set is ``filter(n > 0)``."""
-    return (
-        merged.filter(F.col("prop_key").isin(list(NAME_PROPS)))
-        .groupBy(F.col("value").alias("name"))
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def id_counts_of(merged: DataFrame) -> DataFrame:
-    """(id, n) row counts over exploded source_ids — refcounted distinct
-    id set, additive across disjoint frames."""
-    return (
-        merged.select(F.explode("source_ids").alias("id"))
-        .groupBy("id")
-        .agg(F.count("*").alias("n"))
-    )
-
-
 def node_metadata(merged: DataFrame) -> DataFrame:
-    """The per-node header frame — node-granular, so the incremental
-    path can rebuild it for re-merged cliques only and pass the rest
-    through (every row of a node lies in one frame of the split)."""
+    """The per-node header frame."""
     node_names = (
         merged.filter(F.col("prop_key").isin(list(NAME_PROPS)))
         .groupBy("node_id")

@@ -125,20 +125,12 @@ def attach_refs(
     ).drop("__ref_key")
 
 
-def edge_summary(
-    edges: DataFrame, node_meta: DataFrame, small_edges: bool = False
-) -> DataFrame:
+def edge_summary(edges: DataFrame, node_meta: DataFrame) -> DataFrame:
     """J8 — the 4-key edge summary count:
     (from type signature, edge type, to type signature, datasources
     signature) → count, where a signature is the sorted comma-joined list
-    (:443-452). Plain hash aggregate.
-
-    ``small_edges``: the incremental path passes DELTA-SIZED edge sets
-    against the corpus meta table — hint both probe joins broadcast so
-    they stay map-side (the checkpoint-backed deltas carry no statistics
-    for the initial plan)."""
+    (:443-452). Plain hash aggregate."""
     sig = lambda c: F.array_join(F.array_sort(c), ",")  # noqa: E731
-    h = F.broadcast if small_edges else (lambda df: df)
     from_meta = node_meta.select(
         F.col("node_id").alias("from_id"), F.col("types").alias("from_types")
     )
@@ -146,7 +138,7 @@ def edge_summary(
         F.col("node_id").alias("to_id"), F.col("types").alias("to_types")
     )
     return (
-        h(h(edges).join(from_meta, "from_id"))
+        edges.join(from_meta, "from_id")
         .join(to_meta, "to_id")
         .groupBy(
             sig(F.col("from_types")).alias("from_sig"),

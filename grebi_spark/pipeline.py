@@ -57,8 +57,8 @@ def build_graph(
     bottleneck. At cluster scale the blocks live on executor local
     storage (memory then disk), the standard barrier for
     iterative/multi-stage jobs; for restartability across job failures
-    persist the built state to durable parquet instead
-    (incremental.save_state).
+    build a ``GraphState`` instead (incremental.build_graph_stateful) and
+    persist it to durable Parquet (incremental.save_state_version).
     """
     if prefix_map:
         ingested = [normalise_prefixes(df, prefix_map) for df in ingested]

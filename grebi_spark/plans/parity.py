@@ -902,8 +902,8 @@ LIMIT 5
 # Incremental maintenance as oracle-checked queries: the add / remove /
 # update verbs (incremental.py) produce graphs that must be value-identical
 # to a from-scratch build over the resulting source set — so the DuckDB
-# oracle IS the from-scratch build, and a hash match proves the delta path
-# end to end (grouping, re-merge, additive index, delta materialise).
+# oracle IS the from-scratch build, and a hash match proves each verb's
+# rebuild from the retained rows end to end.
 # Like the Cypher family, the maintained states are built once per
 # (session, sf_dir): build-once / query-many.
 # ---------------------------------------------------------------------------
@@ -954,10 +954,10 @@ def _inc_states(spark: SparkSession, sf_dir: str) -> dict:
 
     * ``full``  — stateful([customers, nations]) + add(regions): grows the
       graph with a source whose ids are TARGETS of existing references
-      (born nodes ⇒ the born-edge materialise leg).
-    * ``geo``   — remove('crm') applied to ``full``: a double-incremental
-      chain (the remove runs on an already-incrementally-maintained
-      state), vanishing nodes + additive count decrements.
+      (new nodes make existing references resolve into edges).
+    * ``geo``   — remove('crm') applied to ``full``: a chain of two
+      verbs (the remove runs on an already-maintained state), vanishing
+      nodes and shrinking counts.
     * ``fused`` — stateful([c, n, r]) + add(zone aliases) under a config
       whose identifier_props include parity:sameAs: clique FUSION with a
       canonical flip (grebi:* wins election) plus cross-clique reference
@@ -1023,17 +1023,16 @@ def _merge_profile(merged: DataFrame) -> DataFrame:
 
 
 def incremental_add_merge_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """add_datasource correctness gate: the incrementally-grown graph's
+    """add_datasource correctness gate: the grown graph's
     merged profile vs the oracle's from-scratch build over all three
     sources (same SQL as graph_merge_nodes — equality IS the contract)."""
     return _merge_profile(_inc_state(spark, sf_dir, "full").graph.merged)
 
 
 def incremental_add_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The delta-materialise gate: adding regions makes every nation's
-    geo:region value resolvable, so the BORN-edge leg (unchanged rows ⋈
-    newly-born ids) must emit exactly the nation→region FK edges next to
-    the pass-through customer→nation set."""
+    """The materialise gate: adding regions makes every nation's
+    geo:region value resolvable, so the grown graph must hold exactly the
+    nation→region FK edges next to the customer→nation set."""
     edges = _inc_state(spark, sf_dir, "full").graph.edges
     return (
         edges.groupBy("edge_type", "to_id")
@@ -1072,9 +1071,9 @@ FROM merged GROUP BY node_id ORDER BY node_id
 
 
 def incremental_remove_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ADDITIVE index gate: after the chained add + remove, the
-    maintained per-prop counts (old − removed + added, outer-join merge)
-    must equal a fresh aggregation over the surviving corpus."""
+    """The index gate: after the chained add + remove, the maintained
+    per-prop counts must equal a fresh aggregation over the surviving
+    corpus."""
     pc = _inc_state(spark, sf_dir, "geo").graph.index.prop_counts
     return pc.orderBy("prop_key")
 
@@ -1307,14 +1306,8 @@ def graph_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the committed offset — folding only the new file. The final
     maintained merged profile must hash-match the from-scratch oracle
     over all three sources, proving (a) offset bookkeeping loses and
-    duplicates nothing across restarts and (b) chained incremental folds
-    converge to the batch build.
-
-    Scale: each fold pays only the broadcast-delta verb cost (the
-    no-corpus-shuffle contract the incremental family is plan-gated on),
-    so the steady-state cost per arriving dump is delta-sized — the
-    always-on KG ingestion loop a 100 TB deployment actually runs,
-    rather than a nightly full rebuild."""
+    duplicates nothing across restarts and (b) chained folds converge to
+    the batch build."""
     import json as _json
     import os as _os
     import tempfile as _tempfile
@@ -1499,20 +1492,18 @@ def graph_maintenance_stream_verbs(spark: SparkSession, sf_dir: str) -> DataFram
 
 def kv_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving-tier maintenance, driver-visible: build the EXECUTED
-    sqlite KV store from the PRE-verb state, apply the add verb's
-    retained ``last_delta`` with ``refresh_kv_store`` (delete retired
-    cliques' rows, insert re-merged ones — never a full rebuild), then
-    READ THE REFRESHED STORE BACK and profile the stored node documents.
-    The profile must hash-match the same from-scratch oracle the
-    graph-side verbs match (ORACLE_MERGE_NODES), proving the
-    dump→fold→upsert loop is delta-sized end to end INCLUDING the
-    serving artifact — the reference instead rebuilds its RocksDB per
-    release (07_create_db/rocksdb/grebi_make_rocks/src/main.rs:32-78),
-    a full-corpus write per refreshed dump at 100 TB."""
+    sqlite KV store from the PRE-verb state, rebuild it at the same path
+    from the add verb's graph (the swap refresh: a new file moved onto
+    the served one), then READ THE REFRESHED STORE BACK and profile the
+    stored node documents. The profile must hash-match the same
+    from-scratch oracle the graph-side verbs match (ORACLE_MERGE_NODES),
+    proving the dump→verb→swap loop end to end INCLUDING the serving
+    artifact — the reference likewise rebuilds its RocksDB per release
+    (07_create_db/rocksdb/grebi_make_rocks/src/main.rs:32-78)."""
     import sqlite3
     import tempfile
 
-    from ..sinks.kv import build_kv_store, refresh_kv_store
+    from ..sinks.kv import build_kv_store
 
     key = f"kvrefresh:{spark.sparkContext.applicationId}:{sf_dir}"
     if key in _INC_CACHE:
@@ -1523,7 +1514,10 @@ def kv_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_kv_store(
         base.graph.merged, base.graph.nodes, db, shards=4, edges=base.graph.edges
     )
-    refresh_kv_store(_inc_state(spark, sf_dir, "full"), db, shards=4)
+    full = _inc_state(spark, sf_dir, "full")
+    build_kv_store(
+        full.graph.merged, full.graph.nodes, db, shards=4, edges=full.graph.edges
+    )
 
     con = sqlite3.connect(db)
     rows = con.execute("SELECT id, json FROM kv").fetchall()
@@ -1557,12 +1551,13 @@ def kv_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _refreshed_core_root(spark: SparkSession, sf_dir: str) -> str:
     """One maintained search core per (session, sf_dir): built from the
-    PRE-verb 'base' state, then delta-refreshed with the add verb — the
-    shared serving artifact behind ``solr_refresh_roundtrip`` (doc
-    profile) and ``core_search_serving`` (the /search read path)."""
+    PRE-verb 'base' state, then rebuilt at the same root from the add
+    verb's graph — the shared serving artifact behind
+    ``solr_refresh_roundtrip`` (doc profile) and ``core_search_serving``
+    (the /search read path)."""
     import tempfile
 
-    from ..sinks.solr_jsonl import build_solr_core, refresh_solr_core
+    from ..sinks.solr_jsonl import build_solr_core
 
     key = f"solrcoreroot:{spark.sparkContext.applicationId}:{sf_dir}"
     if key not in _INC_CACHE:
@@ -1571,21 +1566,21 @@ def _refreshed_core_root(spark: SparkSession, sf_dir: str) -> str:
         build_solr_core(
             base.graph.merged, base.graph.nodes, base.graph.edges, root
         )
-        refresh_solr_core(spark, _inc_state(spark, sf_dir, "full"), root)
+        full = _inc_state(spark, sf_dir, "full").graph
+        build_solr_core(full.merged, full.nodes, full.edges, root)
         _INC_CACHE[key] = root
     return _INC_CACHE[key]
 
 
 def core_search_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6 SERVED FROM THE MAINTAINED CORE — the reference's actual read
-    path (GrebiApi.java:185-227 queries Solr, the incrementally
-    refreshed store, never the graph build): page 1 (size 5) of
-    /search?q=n:1 over the delta-refreshed segment/tombstone core's
-    live documents, id-contains scoring, node_id tiebreak. The facade's
-    /search serves exactly this when a core is configured
-    (api.http_api, ``solr_cores``); the oracle renders the same page
-    from the from-scratch post-verb graph, so a stale segment, an
-    uncovered tombstone, or a scoring drift all hash-mismatch."""
+    path (GrebiApi.java:185-227 queries Solr, never the graph build):
+    page 1 (size 5) of /search?q=n:1 over the core rebuilt after the add
+    verb, id-contains scoring, node_id tiebreak. The facade's /search
+    serves exactly this when a core is configured (api.http_api,
+    ``solr_cores``); the oracle renders the same page from the
+    from-scratch post-verb graph, so a stale serving file or a scoring
+    drift hash-mismatches."""
     from ..sinks.solr_jsonl import search_core_docs
 
     page, _facets = search_core_docs(
@@ -1618,17 +1613,15 @@ _CORE_BM25_TOPK = 15
 def core_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 SERVED FROM THE MAINTAINED CORE'S STORED POSTINGS — Solr's
     actual ranking model (Lucene BM25Similarity) under Lucene's actual
-    index-vs-query split: tokenization happens at build/refresh time
-    (build_solr_core / refresh_solr_core write the postings and roll
-    the live-corpus stats row forward), and this request reads the
-    postings of its terms and ONE stats row from the serving sqlite
-    file — no request-time tokenize, no Spark. The delta refresh moved
-    the stats (new = old − replaced + upserted), so the verb's new
-    region docs ('MIDDLE EAST' carries the only 'east') participate in
-    matching AND in df/avgdl. The oracle recomputes the whole model
-    from the from-scratch post-verb doc set — a stale posting, an
-    unapplied deletion, or a drifted stats row shifts scores and
-    hash-mismatches. Reference: GrebiApi's /search delegates ranking to
+    index-vs-query split: tokenization happens at build time
+    (build_solr_core writes the postings and the corpus stats row), and
+    this request reads the postings of its terms and ONE stats row from
+    the serving sqlite file — no request-time tokenize, no Spark. The
+    rebuild after the add verb moved the stats, so the verb's new region
+    docs ('MIDDLE EAST' carries the only 'east') participate in matching
+    AND in df/avgdl. The oracle recomputes the whole model from the
+    from-scratch post-verb doc set — a stale posting or a stale stats
+    row shifts scores and hash-mismatches. Reference: GrebiApi's /search delegates ranking to
     Solr (GrebiSolrClient.java:105-147); here the serving tier ranks
     natively from its own index."""
     from ..sinks.solr_jsonl import search_core_docs_bm25
@@ -1695,18 +1688,14 @@ LIMIT {_CORE_BM25_TOPK}
 
 def solr_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search-tier maintenance, driver-visible and EXECUTED: build the
-    segment/tombstone search core (sinks.solr_jsonl.build_solr_core)
-    from the PRE-verb state, apply the add verb's delta with
-    ``refresh_solr_core`` (one new segment + tombstones — old segments
-    never rewritten, the Lucene maintenance shape), then READ THE
-    REFRESHED CORE BACK and profile the live node documents. The
-    profile must hash-match a from-scratch DuckDB rendering of the
-    post-verb docs (field count includes the ``<prop>_names``
-    denormalisation, grebi_make_solr/src/main.rs:184-203) — closing the
-    serving-tier gap VERDICT r5 flagged: the KV store had an executed
-    delta refresh, the search core only emitted doc sets. The reference
-    instead re-imports the whole core per release
-    (07_create_db/solr/solr_import.dockerpy:50-90)."""
+    search core (sinks.solr_jsonl.build_solr_core) from the PRE-verb
+    state, rebuild it at the same root from the add verb's graph (the
+    swap refresh), then READ THE REFRESHED CORE BACK and profile the
+    node documents. The profile must hash-match a from-scratch DuckDB
+    rendering of the post-verb docs (field count includes the
+    ``<prop>_names`` denormalisation, grebi_make_solr/src/main.rs:
+    184-203). The reference likewise re-imports the whole core per
+    release (07_create_db/solr/solr_import.dockerpy:50-90)."""
     from ..sinks.solr_jsonl import read_solr_core
 
     key = f"solrrefresh:{spark.sparkContext.applicationId}:{sf_dir}"

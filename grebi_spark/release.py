@@ -18,6 +18,12 @@ of the existing sink writes over the built graph's frames (each
 individually plan-gated/oracle-checked); the summary and manifest are
 the only driver-side collects, both bounded by distinct prop/type
 counts, never by data size.
+
+Maintenance has one writer: after a maintenance verb
+(``incremental.add_datasource`` and friends) returns a new graph,
+``make_release`` on that graph into the same directory rewrites every
+artifact, and the executed stores are swapped in atomically under a
+running server.
 """
 
 from __future__ import annotations
@@ -27,7 +33,7 @@ import os
 
 from .operators.index import summary_json
 from .pipeline import BuiltGraph
-from .sinks.kv import build_kv_store, refresh_kv_store
+from .sinks.kv import build_kv_store
 from .sinks.neo4j_csv import (
     INDEX_STATEMENTS,
     import_command,
@@ -36,7 +42,6 @@ from .sinks.neo4j_csv import (
 )
 from .sinks.solr_jsonl import (
     build_solr_core,
-    refresh_solr_core,
     solr_import_requests,
     solr_schema_fields,
     write_solr_jsonl,
@@ -59,13 +64,18 @@ def make_release(
           solr/{nodes,edges,autocomplete}/part-*   (JSONL docs)
           solr/schema.json              # add-field requests
           solr/import_requests.json     # the bulk-load request plan
-          solr/core/                    # EXECUTED segment/tombstone core
+          solr/core/                    # EXECUTED search core
           kv/store.sqlite               # executed id→object store
           summary.json                  # the summary service's document
           metadata.json                 # counts + layout (the manifest)
 
-    The executed halves (KV store + solr core) are MAINTAINABLE:
-    ``refresh_release`` applies an incremental verb's deltas in place.
+    A release is maintained by running ``make_release`` again, on the
+    graph a maintenance verb returned, into the same ``out_dir``: the
+    executed halves (KV store + search core) are built beside their
+    serving files and swapped in with ``os.replace``, so a server over
+    this directory (``release_server``) answers from the new graph on
+    its next request. The manifest's ``refreshes`` counts those
+    rebuilds.
     """
     neo4j_dir = os.path.join(out_dir, "neo4j")
     solr_dir = os.path.join(out_dir, "solr")
@@ -109,6 +119,11 @@ def make_release(
     with open(os.path.join(out_dir, "summary.json"), "w") as fh:
         json.dump(summary, fh)
 
+    meta_path = os.path.join(out_dir, "metadata.json")
+    refreshes = 0
+    if os.path.exists(meta_path):  # a rebuild of an existing release
+        with open(meta_path) as fh:
+            refreshes = json.load(fh).get("refreshes", 0) + 1
     manifest = {
         "subgraph_name": name,
         "n_nodes": graph.nodes.count(),
@@ -116,12 +131,12 @@ def make_release(
         "n_kv_rows": n_kv,
         "n_prop_keys": len(summary["entity_props"]),
         "n_types": len(summary["types"]),
-        "refreshes": 0,
+        "refreshes": refreshes,
         "neo4j_import_argv": cmd,
         "solr_import_requests": {k: len(v) for k, v in reqs.items()},
         "artifacts": _artifact_listing(out_dir),
     }
-    with open(os.path.join(out_dir, "metadata.json"), "w") as fh:
+    with open(meta_path, "w") as fh:
         json.dump(manifest, fh, indent=1)
     return manifest
 
@@ -160,7 +175,7 @@ def make_multi_release(
 
     Returns {"metadata", "manifests", "graphs"} — feed ``graphs`` +
     ``out_dir`` to ``release_server`` to serve every subgraph from its
-    own maintained artifacts."""
+    own release artifacts."""
     from .pipeline import build_graph
     from .sources.datasources import load_datasource_config, run_ingest_job
 
@@ -191,7 +206,7 @@ def make_multi_release(
 
 def release_server(graphs: dict, out_dir: str, **kwargs):
     """The facade over a (multi-)release root: each subgraph's /search
-    and /suggest serve its MAINTAINED solr core, /resolve, node and edge
+    and /suggest serve its executed search core, /resolve, node and edge
     pages its executed KV store — one service map across every
     subgraph (``/summaries`` aggregates them, GrebiSummarySvc.java:34).
     A subgraph whose release lacks either store raises ValueError.
@@ -209,53 +224,3 @@ def release_server(graphs: dict, out_dir: str, **kwargs):
         },
         **kwargs,
     )
-
-
-def refresh_release(state, out_dir: str, kv_shards: int = 4) -> dict:
-    """Delta-maintain an existing release after an incremental verb:
-    upsert the verb's delta into the EXECUTED serving halves — the KV
-    store (``refresh_kv_store``) and the solr segment core
-    (``refresh_solr_core``, one new segment + tombstones, sealed
-    segments untouched) — then rewrite the summary document and the
-    manifest counts. The refresh I/O is delta-sized end to end; the
-    bulk-import artifacts (Neo4j CSVs, plain Solr JSONL) are full-load
-    inputs by nature and stay as built — re-run ``make_release`` when a
-    new bulk import is actually wanted. The reference re-runs its
-    whole 07_create_db stage per release; this is the per-dump loop a
-    100 TB deployment runs instead. Returns the per-store applied
-    counts."""
-    spark = state.rows.sparkSession
-    stats = {
-        "kv": refresh_kv_store(
-            state, os.path.join(out_dir, "kv", "store.sqlite"), shards=kv_shards
-        ),
-        "solr_core": refresh_solr_core(
-            spark, state, os.path.join(out_dir, "solr", "core")
-        ),
-    }
-    with open(os.path.join(out_dir, "metadata.json")) as fh:
-        manifest = json.load(fh)
-    summary = summary_json(state.graph.index, manifest["subgraph_name"])
-    with open(os.path.join(out_dir, "summary.json"), "w") as fh:
-        json.dump(summary, fh)
-    # recount the refreshed store so the manifest stays reconcilable
-    # against the executed artifact it describes
-    import sqlite3
-
-    con = sqlite3.connect(os.path.join(out_dir, "kv", "store.sqlite"))
-    try:
-        n_kv = con.execute("SELECT count(*) FROM kv").fetchone()[0]
-    finally:
-        con.close()
-    manifest.update(
-        n_kv_rows=n_kv,
-        n_nodes=state.graph.nodes.count(),
-        n_edges=state.graph.edges.count(),
-        n_prop_keys=len(summary["entity_props"]),
-        n_types=len(summary["types"]),
-        refreshes=manifest.get("refreshes", 0) + 1,
-        artifacts=_artifact_listing(out_dir),
-    )
-    with open(os.path.join(out_dir, "metadata.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    return stats

@@ -209,16 +209,16 @@ def _write_shards(
     df.rdd.mapPartitions(write).count()
 
 
-def _load_shards(con, stage: str, tag: str, tables, prefix: str = "") -> None:
+def _load_shards(con, stage: str, tag: str, tables) -> None:
     """Append every completed ``tag`` shard under ``stage`` to ``con``'s
-    ``prefix + table`` tables. ATTACH is not allowed inside a
+    tables of the same names. ATTACH is not allowed inside a
     transaction, so each shard is committed before it is detached."""
     import glob
 
     for f in sorted(glob.glob(f"{stage}/shard-{tag}-*.sqlite")):
         con.execute("ATTACH DATABASE ? AS s", (f,))
         for t in tables:
-            con.execute(f"INSERT INTO {prefix}{t} SELECT * FROM s.{t}")
+            con.execute(f"INSERT INTO {t} SELECT * FROM s.{t}")
         con.commit()
         con.execute("DETACH DATABASE s")
 
@@ -267,6 +267,10 @@ def build_kv_store(
     shard db on the executor (the analogue of per-ingest-job SST files),
     and the driver's compaction pass ATTACHes the shards into ONE
     serving file in key order, indexes it and VACUUMs (compact_range).
+    The file is built at ``<db_path>.tmp`` and moved onto ``db_path``
+    with ``os.replace``, so rebuilding a served store is a swap: a
+    reader opens the old file or the new one, never a missing or
+    half-loaded one (``open_store`` reopens on the inode change).
     Local/shared-FS constraint as for every embedded store. Returns the
     number of node rows loaded."""
     import shutil
@@ -280,21 +284,14 @@ def build_kv_store(
     for table, df in frames.items():
         _write_shards(stage, table, {table: _KV_TABLES[table]}, df)
 
-    # compaction: merge shards in key order into the serving file
-    if os.path.exists(db_path):
-        os.remove(db_path)
-    with closing(sqlite3.connect(db_path)) as con:
+    # compaction: merge shards in key order into a new file, then swap
+    # it onto the serving path (readers hold the old file or the new)
+    tmp = f"{db_path}.tmp"
+    if os.path.exists(tmp):
+        os.remove(tmp)
+    with closing(sqlite3.connect(tmp)) as con:
         for ddl in _KV_SCHEMA:
             con.execute(ddl)
-        # store-level metadata: whether the edge table is POPULATED by
-        # contract — refresh_kv_store must not upsert delta edges into a
-        # store deliberately built without edges (a half-populated edge
-        # table matches neither rebuild shape)
-        con.execute("CREATE TABLE meta (k TEXT PRIMARY KEY, v TEXT)")
-        con.execute(
-            "INSERT INTO meta VALUES ('with_edges', ?)",
-            ("1" if edges is not None else "0",),
-        )
         for table in frames:
             _load_shards(con, stage, table, [table])
         for ddl in _KV_INDEXES:
@@ -302,117 +299,9 @@ def build_kv_store(
         con.commit()
         con.execute("VACUUM")  # the compact_range step
         n = con.execute("SELECT count(*) FROM kv").fetchone()[0]
+    os.replace(tmp, db_path)
     shutil.rmtree(stage, ignore_errors=True)  # shards merged; drop them
     return n
-
-
-def refresh_kv_store(state, db_path: str, shards: int = 4) -> dict:
-    """Delta-maintain the EXECUTED serving store after an incremental
-    verb: upsert only the cliques the verb touched instead of rebuilding
-    the whole KV file. The reference rebuilds its RocksDB from scratch
-    per release (07_create_db/rocksdb) — at 100 TB that is a full-corpus
-    write per refreshed dump, which the graph-side incremental verbs
-    already avoid; this closes the same gap on the serving tier, so the
-    end-to-end loop (dump lands → graph folds → store upserts) is
-    delta-sized throughout.
-
-    Uses the verb's retained ``last_delta`` frames (all delta-sized,
-    already materialised): retired canonicals' node/alias/header rows
-    and removed edge ids are DELETEd, the re-merged cliques' rows
-    INSERTed — a persisting re-merged canonical is in both sets, i.e.
-    an upsert. Delta rows arrive via the same distributed shard
-    protocol as the build; the driver applies deletes + inserts in ONE
-    transaction, so a reader never observes a half-applied refresh.
-    Result is table-for-table identical to ``build_kv_store`` of the
-    new state (asserted by the suite). Returns applied-row counts."""
-    import shutil
-
-    d = state.last_delta
-    if not d:
-        raise ValueError(
-            "state carries no last_delta (from-scratch build, loaded, or "
-            "compacted state) — build the store with build_kv_store"
-        )
-    if not os.path.exists(db_path):
-        raise ValueError(
-            f"no store at {db_path} — refresh maintains an EXISTING "
-            "build_kv_store file (sqlite3.connect would silently create "
-            "an empty one)"
-        )
-    # honor the store's edge contract: a store deliberately built
-    # without edges must not gain a half-populated edge table from
-    # delta upserts (it would then match neither rebuild shape)
-    con0 = sqlite3.connect(db_path)
-    try:
-        row = con0.execute("SELECT v FROM meta WHERE k='with_edges'").fetchone()
-    except sqlite3.OperationalError as exc:
-        raise ValueError(
-            f"{db_path} has no meta table — built by a pre-refresh "
-            "version of build_kv_store; rebuild it once to make it "
-            "refreshable"
-        ) from exc
-    finally:
-        con0.close()
-    with_edges = row is not None and row[0] == "1"
-
-    stage = f"{db_path}.refresh-shards"
-    shutil.rmtree(stage, ignore_errors=True)  # incl. stale .tmp-* attempts
-    os.makedirs(stage, exist_ok=True)
-
-    tables = dict(_KV_TABLES, del_node="id TEXT", del_edge="id TEXT")
-    staged = {
-        "del_node": d["retired"].select(F.col("node_id").alias("id"))
-        .repartition(shards),
-        "del_edge": d["removed_edge_ids"].repartition(shards),
-        **_kv_frames(
-            d["merged_delta"],
-            d["meta_delta"],
-            d["new_edge_rows"] if with_edges else None,
-            shards,
-        ),
-    }
-    for table, df in staged.items():
-        _write_shards(stage, table, {table: tables[table]}, df)
-
-    con = sqlite3.connect(db_path, isolation_level=None)  # manual txn
-    counts = {"deleted_nodes": 0, "deleted_edges": 0,
-              "nodes": 0, "aliases": 0, "edges": 0}
-    try:
-        # stage all delta shards into TEMP tables first — sqlite forbids
-        # ATTACH inside a transaction, so attach/copy/detach happens
-        # outside it and the visible apply below stays atomic
-        for table, cols in tables.items():  # stage_edge stays empty without edges
-            con.execute(f"CREATE TEMP TABLE stage_{table} ({cols})")
-            _load_shards(con, stage, table, [table], prefix="stage_")
-
-        con.execute("BEGIN")
-        # deletes first: a persisting re-merged canonical is retired AND
-        # re-inserted below (upsert); aliases are keyed back by node_id
-        retired = "(SELECT id FROM stage_del_node)"
-        counts["deleted_nodes"] = con.execute(
-            f"DELETE FROM kv WHERE id IN {retired}"
-        ).rowcount
-        con.execute(f"DELETE FROM alias WHERE node_id IN {retired}")
-        con.execute(f"DELETE FROM node WHERE node_id IN {retired}")
-        counts["deleted_edges"] = con.execute(
-            "DELETE FROM edge WHERE id IN (SELECT id FROM stage_del_edge)"
-        ).rowcount
-        for table, key in (("kv", "nodes"), ("alias", "aliases"),
-                           ("node", None), ("edge", "edges")):
-            n = con.execute(
-                f"INSERT INTO {table} SELECT * FROM stage_{table}"
-            ).rowcount
-            if key:
-                counts[key] = n
-        con.execute("COMMIT")
-    except Exception:
-        if con.in_transaction:
-            con.execute("ROLLBACK")
-        raise
-    finally:
-        con.close()
-    shutil.rmtree(stage, ignore_errors=True)  # applied; drop the shards
-    return counts
 
 
 # --- the serving read path: pure sqlite reads, no Spark -------------------
@@ -424,7 +313,7 @@ def open_store(path: str) -> sqlite3.Connection:
     """This thread's read-only connection to the sqlite store at
     ``path``. ``mode=ro`` makes a wrong path raise instead of creating
     an empty file. The connection is reopened when the file changes on
-    disk (a store rebuilt in place is a new file)."""
+    disk (a rebuilt store is swapped in as a new file)."""
     st = os.stat(path)  # FileNotFoundError for a missing store
     key = (st.st_ino, st.st_mtime_ns)
     cons = _readers.__dict__.setdefault("cons", {})

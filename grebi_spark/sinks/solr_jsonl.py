@@ -113,108 +113,16 @@ def solr_schema_fields(prop_keys: list[str]) -> list[dict]:
     return fields
 
 
-def solr_delta_docs(state) -> dict[str, DataFrame]:
-    """Delta Solr import set after an incremental verb — the serving-tier
-    twin of ``sinks.kv.refresh_kv_store`` for the search core. The
-    reference regenerates the whole Solr JSONL per release
-    (06_prepare_db_import/grebi_make_solr, 07_create_db/solr); Solr
-    itself upserts by id and deletes by id, so a maintained core needs
-    only this delta set:
-
-    * ``node_upserts`` — re-rendered docs of (a) the re-merged cliques
-      and (b) every node whose doc EMBEDS a changed clique's names via
-      the ``<prop>_names`` denormalisation (grebi_make_solr/src/
-      main.rs:184-203) — the embed makes doc deltas propagate one step
-      backward along references, so those unchanged-graph nodes still
-      need re-indexing;
-    * ``node_deletions`` — vanished node ids;
-    * ``edge_upserts`` / ``edge_deletions`` — the verb's new edge rows /
-      removed edge ids. The two sets are DISJOINT by construction: an
-      unchanged edge of a re-merged clique keeps its content-hashed id
-      and appears in both the verb's removed and new rows, so deletions
-      are anti-joined against the upsert ids — apply the four sets in
-      ANY order (Solr add-by-id already replaces).
-
-    Everything stays broadcast-delta: the stored merged/meta tables are
-    only semi-probed map-side (same no-corpus-shuffle contract as the
-    verbs); the autocomplete core is NOT in the delta — its name list is
-    already additively maintained (state.counts.name_counts), regenerate
-    it from there. Refresh after EVERY verb: ``last_delta`` describes
-    only the latest one."""
-    d = state.last_delta
-    if not d:
-        raise ValueError(
-            "state carries no last_delta (from-scratch build, loaded, or "
-            "compacted state) — render the full core with write_solr_jsonl"
-        )
-    g = state.graph
-    changed = (
-        d["retired"]
-        .unionByName(d["merged_delta"].select("node_id"))
-        .distinct()
-        .localCheckpoint()
-    )
-    # nodes whose docs embed a changed node's names: one map-side
-    # broadcast-semi scan of the stored merged table (probe column
-    # aliased — `changed` shares lineage with the stored merged frame,
-    # so a raw node_id reference would be an ambiguous self-join)
-    probe = changed.select(F.col("node_id").alias("__changed_id"))
-    referencing = (
-        g.merged.join(
-            F.broadcast(probe),
-            g.merged.value == F.col("__changed_id"),
-            "left_semi",
-        )
-        .select("node_id")
-        .distinct()
-    )
-    upsert_ids = (
-        d["merged_delta"]
-        .select("node_id")
-        .unionAll(referencing)
-        .distinct()
-        .localCheckpoint()
-    )
-    rows = g.merged.join(F.broadcast(upsert_ids), "node_id", "left_semi")
-    # meta restricted to (doc nodes ∪ their referenced values) — the two
-    # uses solr_node_docs makes of node_meta, both delta-sized probes
-    ref_vals = rows.select(F.col("value").alias("node_id")).distinct()
-    meta_small = g.nodes.join(
-        F.broadcast(upsert_ids.unionAll(ref_vals).distinct()),
-        "node_id",
-        "left_semi",
-    ).localCheckpoint()
-    return {
-        "node_upserts": solr_node_docs(rows, meta_small),
-        "node_deletions": d["vanished"].select(
-            F.col("node_id").alias("grebi__nodeId")
-        ),
-        "edge_upserts": solr_edge_docs(d["new_edge_rows"]),
-        "edge_deletions": d["removed_edge_ids"]
-        .join(
-            F.broadcast(d["new_edge_rows"].select("edge_id")),
-            "edge_id",
-            "left_anti",
-        )
-        .select(F.col("edge_id").alias("grebi__edgeId")),
-    }
-
-
-# --- the EXECUTED search core: segment/tombstone maintenance ----------------
+# --- the EXECUTED search core ----------------------------------------------
 #
 # The reference's Solr tier is rebuilt from scratch per release
-# (07_create_db/solr/solr_import.dockerpy). The executable analogue of
-# a MAINTAINED core — without a Solr binary in the container — is the
-# storage model Solr itself (Lucene) uses: immutable SEGMENTS plus
-# per-refresh TOMBSTONES. A refresh appends one segment holding the
-# upserted docs and one tombstone set covering (deleted ∪ replaced)
-# ids; old segments are NEVER rewritten, so the refresh write is
-# delta-sized. A doc is live iff no tombstone with a HIGHER segment
-# number covers its id — exactly Lucene's deleted-docs semantics, and
-# the same LSM shape as compact_ann_index / compact_state.
+# (07_create_db/solr/solr_import.dockerpy), and so is this core: the
+# node and edge docs are one Parquet segment each (``seg=0``), and a new
+# graph is served by building the core again (``build_solr_core``),
+# which swaps a new serving file in.
 #
 # Requests are served from a sqlite file in the core root that holds the
-# live node docs in the shapes the routes read (Lucene's stored fields,
+# node docs in the shapes the routes read (Lucene's stored fields,
 # term dictionary and postings): ``doc`` (id, Spark-lowered id, types and
 # names as JSON, token count), ``name`` (one row per name, Spark-lowered,
 # with its length), ``field`` (node_id, field, value) for WHOLE_FIELD
@@ -223,7 +131,6 @@ def solr_delta_docs(state) -> dict[str, DataFrame]:
 # names. Every lowering and tokenizing happens in Spark at build time, so
 # the readers below compare stored strings only.
 
-_CORE_KINDS = ("nodes", "edges")
 CORE_DB = "serve.sqlite"
 
 # the serving tables, each with its columns in shard order
@@ -250,7 +157,6 @@ _CORE_INDEXES = (
     "CREATE INDEX post_node ON post (node_id)",
     "CREATE INDEX suggest_order ON suggest (len, name)",
 )
-_SUGGEST_ROWS = "SELECT name, min(name_lower), min(len) FROM {} GROUP BY name"
 # the doc header arrays, under names no escaped property key can take
 _HEADER_FIELDS = {"types": ":types", "datasources": ":datasources"}
 
@@ -258,17 +164,6 @@ _HEADER_FIELDS = {"types": ":types", "datasources": ":datasources"}
 def core_db_path(root: str) -> str:
     """The serving sqlite file of the core at ``root``."""
     return os.path.join(root, CORE_DB)
-
-
-def _core_segments(spark, root: str, kind: str) -> list[int]:
-    from ..fsutil import hadoop_ls
-
-    segs = []
-    for st in hadoop_ls(spark, f"{root}/{kind}/segments", dirs_only=True):
-        name = st.getPath().getName()
-        if name.startswith("seg="):
-            segs.append(int(name.split("=", 1)[1]))
-    return sorted(segs)
 
 
 def _name_tokens():
@@ -317,28 +212,17 @@ def _core_table_rows(r):
         yield "post", (tok, node, tf, len(toks))
 
 
-def _stage_core_rows(docs: DataFrame, db_path: str, suffix: str) -> str:
-    """Write ``docs``' serving rows as executor-side shards; returns the
-    stage directory."""
-    import shutil
-
-    from .kv import _write_shards
-
-    stage = f"{db_path}.{suffix}"
-    shutil.rmtree(stage, ignore_errors=True)  # incl. stale .tmp-* attempts
-    os.makedirs(stage, exist_ok=True)
-    _write_shards(stage, "core", _CORE_TABLES, _core_rows(docs), _core_table_rows)
-    return stage
-
-
 def build_solr_core(merged, node_meta, edges, root: str) -> None:
-    """Materialise the executed search core from scratch: node and edge
-    docs as segment 0, no tombstones, plus the serving sqlite file
-    (``core_db_path``) over the node docs. Same doc rendering as the
-    JSONL export (solr_node_docs / solr_edge_docs)."""
+    """Materialise the executed search core: node and edge docs as
+    segment 0, plus the serving sqlite file (``core_db_path``) over the
+    node docs. Same doc rendering as the JSONL export (solr_node_docs /
+    solr_edge_docs). The serving file is built at ``<path>.tmp`` and
+    moved onto its path with ``os.replace``, so rebuilding a served core
+    is a swap: a reader sees the old core or the new one, never a
+    missing or half-loaded file."""
     import shutil
 
-    from .kv import _load_shards
+    from .kv import _load_shards, _write_shards
 
     spark = merged.sparkSession
     solr_node_docs(merged, node_meta).write.mode("overwrite").parquet(
@@ -350,161 +234,37 @@ def build_solr_core(merged, node_meta, edges, root: str) -> None:
     # serve what the core stores: the segment read back is cheaper than
     # re-running the doc-render joins
     db = core_db_path(root)
-    stage = _stage_core_rows(
-        spark.read.parquet(f"{root}/nodes/segments/seg=0"), db, "shards"
-    )
-    if os.path.exists(db):
-        os.remove(db)
-    with closing(sqlite3.connect(db)) as con:
+    stage = f"{db}.shards"
+    shutil.rmtree(stage, ignore_errors=True)  # incl. stale .tmp-* attempts
+    os.makedirs(stage, exist_ok=True)
+    docs = spark.read.parquet(f"{root}/nodes/segments/seg=0")
+    _write_shards(stage, "core", _CORE_TABLES, _core_rows(docs), _core_table_rows)
+    tmp = f"{db}.tmp"
+    if os.path.exists(tmp):
+        os.remove(tmp)
+    with closing(sqlite3.connect(tmp)) as con:
         for ddl in _CORE_SCHEMA:
             con.execute(ddl)
         _load_shards(con, stage, "core", _CORE_TABLES)
-        con.execute("INSERT INTO suggest " + _SUGGEST_ROWS.format("name"))
+        con.execute(
+            "INSERT INTO suggest SELECT name, min(name_lower), min(len)"
+            " FROM name GROUP BY name"
+        )
         con.execute(
             "INSERT INTO stats SELECT count(*), coalesce(sum(dl), 0) FROM doc"
         )
         for ddl in _CORE_INDEXES:
             con.execute(ddl)
         con.commit()
+    os.replace(tmp, db)
     shutil.rmtree(stage, ignore_errors=True)
-
-
-def refresh_solr_core(spark, state, root: str) -> dict[str, int]:
-    """Delta-maintain the EXECUTED core after an incremental verb: write
-    ``solr_delta_docs``' upsert sets as a NEW segment and its
-    (deletions ∪ replaced ids) as that segment's tombstones. Old
-    segments are untouched — the refresh I/O is delta-sized, the
-    no-corpus-shuffle contract the graph verbs carry extends through
-    the serving tier (the stored corpus is only broadcast-semi-probed
-    inside solr_delta_docs). The same delta is applied to the serving
-    sqlite file in ONE transaction — replaced and deleted docs out,
-    upserts in, ``suggest`` and ``stats`` rolled forward — so a reader
-    sees the refresh whole on its next request or not at all. Returns
-    per-set applied counts; the suite asserts read-back ≡ a
-    from-scratch core of the new state."""
-    import shutil
-
-    from .kv import _load_shards
-
-    d = solr_delta_docs(state)
-    segs = _core_segments(spark, root, "nodes")
-    db = core_db_path(root)
-    if not segs or not os.path.exists(db):
-        raise ValueError(
-            f"no core at {root} — refresh maintains an existing "
-            "build_solr_core artifact"
-        )
-    new_seg = max(segs) + 1
-    counts: dict[str, int] = {}
-
-    for kind, idcol, ups, dels in (
-        ("nodes", "grebi__nodeId", d["node_upserts"], d["node_deletions"]),
-        ("edges", "grebi__edgeId", d["edge_upserts"], d["edge_deletions"]),
-    ):
-        ups = ups.localCheckpoint()  # materialise before any same-root read
-        ups.write.mode("overwrite").parquet(
-            f"{root}/{kind}/segments/seg={new_seg}"
-        )
-        tomb = dels.select(F.col(idcol).alias("id")).unionByName(
-            ups.select(F.col(idcol).alias("id"))
-        )
-        tomb.write.mode("overwrite").parquet(
-            f"{root}/{kind}/tombstones/seg={new_seg}"
-        )
-        counts[f"{kind[:-1]}_upserts"] = ups.count()
-        if kind == "nodes":
-            node_ups = ups
-            deleted = [(r[0],) for r in dels.collect()]  # delta-sized
-            counts["node_deletions"] = len(deleted)
-        else:
-            counts["edge_deletions"] = dels.count()
-
-    stage = _stage_core_rows(node_ups, db, "refresh-shards")
-    con = sqlite3.connect(db, isolation_level=None)  # manual txn
-    try:
-        # staging happens outside the transaction: sqlite forbids ATTACH
-        # inside one
-        for table, cols in _CORE_TABLES.items():
-            con.execute(f"CREATE TEMP TABLE stage_{table} ({cols})")
-        _load_shards(con, stage, "core", _CORE_TABLES, prefix="stage_")
-        con.execute("CREATE TEMP TABLE stage_del (id TEXT)")
-        con.executemany("INSERT INTO stage_del VALUES (?)", deleted)
-        con.execute("INSERT INTO stage_del SELECT node_id FROM stage_doc")
-        gone = "(SELECT id FROM stage_del)"
-
-        con.execute("BEGIN")
-        n_gone, dl_gone = con.execute(
-            f"SELECT count(*), coalesce(sum(dl), 0) FROM doc WHERE node_id IN {gone}"
-        ).fetchone()
-        con.execute(
-            "CREATE TEMP TABLE gone_names AS"
-            f" SELECT DISTINCT name FROM name WHERE node_id IN {gone}"
-        )
-        for table in _CORE_TABLES:
-            con.execute(f"DELETE FROM {table} WHERE node_id IN {gone}")
-            con.execute(f"INSERT INTO {table} SELECT * FROM stage_{table}")
-        con.execute(
-            "DELETE FROM suggest WHERE name IN (SELECT name FROM gone_names)"
-            " AND NOT EXISTS (SELECT 1 FROM name n WHERE n.name = suggest.name)"
-        )
-        con.execute(
-            "INSERT OR IGNORE INTO suggest " + _SUGGEST_ROWS.format("stage_name")
-        )
-        con.execute(
-            "UPDATE stats SET"
-            " n_docs = n_docs - ? + (SELECT count(*) FROM stage_doc),"
-            " total_dl = total_dl - ? + (SELECT coalesce(sum(dl), 0) FROM stage_doc)",
-            (n_gone, dl_gone),
-        )
-        con.execute("COMMIT")
-    except Exception:
-        if con.in_transaction:
-            con.execute("ROLLBACK")
-        raise
-    finally:
-        con.close()
-    shutil.rmtree(stage, ignore_errors=True)
-    return counts
 
 
 def read_solr_core(spark, root: str, kind: str = "nodes"):
-    """The live documents of the maintained core: union every segment
-    (with its ordinal) and drop docs covered by a HIGHER-segment
-    tombstone — Lucene's visibility rule. One anti-join against the
-    (delta-sized) tombstone union; segment files are read as written,
-    no shuffle beyond the join. Maintenance and the suite read the
-    core this way; requests read the serving sqlite file."""
-    from functools import reduce
-
-    segs = _core_segments(spark, root, kind)
-    if not segs:
-        raise ValueError(f"no {kind} segments under {root}")
-    docs = reduce(
-        lambda a, b: a.unionByName(b),
-        [
-            spark.read.parquet(f"{root}/{kind}/segments/seg={s}").withColumn(
-                "__seg", F.lit(s)
-            )
-            for s in segs
-        ],
-    )
-    idcol = "grebi__nodeId" if kind == "nodes" else "grebi__edgeId"
-    tombs = [
-        spark.read.parquet(f"{root}/{kind}/tombstones/seg={s}").withColumn(
-            "__tseg", F.lit(s)
-        )
-        for s in segs
-        if s > 0
-    ]
-    if not tombs:
-        return docs.drop("__seg")
-    tomb = reduce(lambda a, b: a.unionByName(b), tombs)
-    live = docs.join(
-        F.broadcast(tomb),
-        (docs[idcol] == tomb["id"]) & (tomb["__tseg"] > docs["__seg"]),
-        "left_anti",
-    )
-    return live.drop("__seg")
+    """The documents of the core at ``root`` (``kind`` ``nodes`` or
+    ``edges``) as a DataFrame. Maintenance and the suite read the core
+    this way; requests read the serving sqlite file."""
+    return spark.read.parquet(f"{root}/{kind}/segments/seg=0")
 
 
 # --- the serving read path: pure sqlite reads, no Spark -----------------------
@@ -582,9 +342,9 @@ def search_core_docs(
     filters: tuple[tuple[str, tuple[str, ...], bool], ...] = (),
     exclude_obsolete: bool = True,
 ) -> tuple[list[dict], dict[str, dict]]:
-    """Q6 over the MAINTAINED core — the reference's actual read path:
-    GrebiApi's /search queries Solr, the incrementally refreshed store
-    (GrebiApi.java:185-227), not the graph build. Same semantics as
+    """Q6 over the served core — the reference's actual read path:
+    GrebiApi's /search queries Solr (GrebiApi.java:185-227), not the
+    graph build. Same semantics as
     plans.graph_queries.search_nodes (id beats name scoring, WHOLE_FIELD
     filters, the always-on obsolete exclusion, multi-select facets),
     value-identical output, suite-asserted: a substring test is
@@ -732,7 +492,7 @@ def search_core_docs_bm25(
     filters: tuple[tuple[str, tuple[str, ...], bool], ...] = (),
     exclude_obsolete: bool = True,
 ) -> tuple[list[dict], dict[str, dict]]:
-    """Q6 over the maintained core with Lucene's ACTUAL ranking model:
+    """Q6 over the served core with Lucene's ACTUAL ranking model:
     same WHOLE_FIELD filter / multi-select facet semantics as
     ``search_core_docs``, but relevance is Okapi BM25 over the name
     field (``bm25_core_scores``) instead of the id/name boost ladder.
@@ -859,7 +619,7 @@ def bm25_core_docs(
 
 
 def suggest_core_docs(root: str, q: str, size: int = 10) -> list[str]:
-    """Q7 autocomplete over the maintained core's names — the
+    """Q7 autocomplete over the served core's names — the
     engine-side twin of the exported autocomplete core's suggester
     (GrebiApi.java:228): distinct names whose Spark-lowered form starts
     with the lowered ``q``, shortest first, then by name."""
@@ -871,45 +631,6 @@ def suggest_core_docs(root: str, q: str, size: int = 10) -> list[str]:
             ((q or "").lower(), size),
         )
     ]
-
-
-def compact_solr_core(spark, root: str) -> int:
-    """Segment merge (Lucene's background compaction): fold every
-    segment's live docs into a fresh segment 0 and drop the tombstones.
-    Returns the number of segments merged away. Content-identity
-    (read_solr_core before == after) is asserted by the suite; the
-    serving sqlite file already holds exactly the live docs and is left
-    as it is.
-
-    In-flight-writer audit (the prune_state_versions race family): this
-    sweep deletes the segments/tombstones dirs wholesale and rebuilds
-    them, so it is SINGLE-WRITER by contract — a concurrent
-    refresh_solr_core racing it could land a segment in the window
-    between delete and rename and lose it. Core maintenance (refresh +
-    compact) must be serialized by the caller (one maintenance loop per
-    core), which matches the suite's and the facade's usage; concurrent
-    READERS are safe (they read the serving file, which compaction does
-    not touch)."""
-    merged_away = 0
-    for kind in _CORE_KINDS:
-        segs = _core_segments(spark, root, kind)
-        if len(segs) <= 1:
-            continue
-        live = read_solr_core(spark, root, kind).localCheckpoint()
-        live.write.mode("overwrite").parquet(f"{root}/{kind}/_compact")
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/{kind}/segments"), True)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/{kind}/tombstones"), True)
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{root}/{kind}/segments"))
-        fs.rename(
-            jvm.org.apache.hadoop.fs.Path(f"{root}/{kind}/_compact"),
-            jvm.org.apache.hadoop.fs.Path(f"{root}/{kind}/segments/seg=0"),
-        )
-        merged_away += len(segs) - 1
-    return merged_away
 
 
 def write_solr_jsonl(

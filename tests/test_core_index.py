@@ -1,8 +1,8 @@
 """The BM25 postings of the maintained search core — Lucene's
-index-vs-query split (sinks.solr_jsonl): tokenize at build/refresh
-time, serve /search?rank=bm25 from the stored postings and live-corpus
-stats row in the core's serving sqlite file, never re-tokenizing the
-corpus per request. ``bm25_core_docs``, the Spark recompute over the
+index-vs-query split (sinks.solr_jsonl): tokenize at build time, serve
+/search?rank=bm25 from the stored postings and corpus stats row in the
+core's serving sqlite file, never re-tokenizing the corpus per
+request. ``bm25_core_docs``, the Spark recompute over the
 live docs, is the oracle.
 
 Reference: GrebiApi's /search delegates ranking to Solr, whose Lucene
@@ -23,10 +23,8 @@ from grebi_spark.sinks.solr_jsonl import (
     bm25_core_docs,
     bm25_core_scores,
     build_solr_core,
-    compact_solr_core,
     core_db_path,
     read_solr_core,
-    refresh_solr_core,
     search_core_docs_bm25,
 )
 from grebi_spark.sources.jsonl import jsonl_to_nodes
@@ -50,7 +48,8 @@ def core(spark, tmp_path_factory):
     """A built-then-refreshed core with controlled names, so every
     corpus statistic the refresh must move is known by construction:
     base = {alpha beta, beta gamma}; the add verb lands {beta delta}
-    (df(beta) 2→3, n_docs 2→3, total_dl 4→6 — every score shifts)."""
+    (df(beta) 2→3, n_docs 2→3, total_dl 4→6 — every score shifts). The
+    refresh rebuilds the core at the same root from the verb's graph."""
     a = _nodes(
         spark,
         [
@@ -69,17 +68,15 @@ def core(spark, tmp_path_factory):
     build_solr_core(s1.graph.merged, s1.graph.nodes, s1.graph.edges, root)
     pre = sorted(bm25_core_scores(root, TERMS).items())
     s2 = add_datasource(s1, b)
-    counts = refresh_solr_core(spark, s2, root)
-    return {"root": root, "pre": pre, "counts": counts}
+    build_solr_core(s2.graph.merged, s2.graph.nodes, s2.graph.edges, root)
+    return {"root": root, "pre": pre, "graph": s2.graph}
 
 
 def test_index_scores_equal_query_time_recompute(spark, core):
-    """After a delta refresh, scoring from the STORED postings (and the
-    rolled-forward stats row) must equal a from-scratch query-time
-    recompute over the live doc set — same formula, same fixed-order
-    sums, value-exact. A stale posting, an unapplied deletion, or a
-    drifted stats row would all diverge here."""
-    assert core["counts"]["node_upserts"] > 0
+    """After a refresh, scoring from the STORED postings (and the stats
+    row) must equal a from-scratch query-time recompute over the live
+    doc set — same formula, same fixed-order sums, value-exact. A stale
+    posting or a stale stats row would diverge here."""
     idx = sorted(bm25_core_scores(core["root"], TERMS).items())
     live = read_solr_core(spark, core["root"], "nodes")
     assert idx == _scored_set(bm25_core_docs(live, TERMS))
@@ -90,8 +87,8 @@ def test_stale_index_would_serve_wrong_scores(spark, core):
     """The refresh MOVED the statistics: pre-refresh scores differ from
     post-refresh ones (df(beta) 2→3, n_docs 2→3, avgdl shifts), so
     serving from an unrefreshed index is an observable wrongness, not a
-    latent one — the reason refresh_solr_core rolls the stats row
-    forward instead of trusting the build-time one."""
+    latent one — the reason a refresh rebuilds the stats row with the
+    postings."""
     post = sorted(bm25_core_scores(core["root"], TERMS).items())
     assert core["pre"] != post
     # and the stored stats row equals the live corpus exactly
@@ -110,10 +107,11 @@ def test_stale_index_would_serve_wrong_scores(spark, core):
 
 
 def test_compaction_rebuilds_index_scores_identical(spark, core):
-    """Segment merge folds the doc store; the served scores are
-    bit-identical across the compaction."""
+    """Rebuilding the core from the same graph — the only compaction a
+    rebuilt core needs — serves bit-identical scores."""
     before = bm25_core_scores(core["root"], TERMS)
-    assert compact_solr_core(spark, core["root"]) >= 1
+    g = core["graph"]
+    build_solr_core(g.merged, g.nodes, g.edges, core["root"])
     assert bm25_core_scores(core["root"], TERMS) == before
 
 

@@ -538,10 +538,10 @@ def test_summary_routes_match_index_aggregates(server, graph):  # noqa: F811
 @pytest.fixture(scope="module")
 def core_stack(spark):
     """The stores of graph state s1 fronting the facade. The fold test
-    then FOLDS a verb and refreshes both stores — every store-backed
-    route must change with no frame rebuild (the reference's read path:
-    GrebiApi queries Solr and RocksDB, the incrementally refreshed
-    stores, GrebiApi.java:185-227)."""
+    then FOLDS a verb and rebuilds both stores in place — every
+    store-backed route must change with no frame rebuild (the
+    reference's read path: GrebiApi queries Solr and RocksDB,
+    GrebiApi.java:185-227)."""
     import tempfile
 
     from grebi_spark.incremental import build_graph_stateful
@@ -587,14 +587,13 @@ def test_fold_plus_core_refresh_changes_search_without_frame_rebuild(
     spark, core_stack
 ):
     """The serving loop: before the fold the stores don't know x:3;
-    after add_datasource + refresh_solr_core + refresh_kv_store the SAME
-    server (still holding the OLD s1 frames) serves it on every route —
-    search, suggest, node page, both edge pages — proving each reads the
-    maintained stores, not the frames, and every refreshed answer is
-    value-identical to the frames of the folded graph."""
+    after add_datasource and a rebuild of both stores at their served
+    paths the SAME server (still holding the OLD s1 frames) serves it on
+    every route — search, suggest, node page, both edge pages — proving
+    each reads the swapped-in stores, not the frames, and every
+    refreshed answer is value-identical to the frames of the folded
+    graph."""
     from grebi_spark.incremental import add_datasource
-    from grebi_spark.sinks.kv import refresh_kv_store
-    from grebi_spark.sinks.solr_jsonl import refresh_solr_core
 
     srv = core_stack["srv"]
     base = "/api/v1/subgraphs/main"
@@ -604,9 +603,11 @@ def test_fold_plus_core_refresh_changes_search_without_frame_rebuild(
     assert _get(srv, f"{base}/nodes/x:1/incoming_edges")[1]["numElements"] == 0
 
     s2 = add_datasource(core_stack["s1"], core_stack["b"])
-    refresh_solr_core(spark, s2, core_stack["root"])
-    refresh_kv_store(s2, core_stack["kv"], shards=2)
     g2 = s2.graph
+    # the same paths the server reads: each store is swapped in place
+    assert _build_stores(g2, os.path.dirname(core_stack["kv"])) == (
+        core_stack["kv"], core_stack["root"]
+    )
 
     st, body = _get(srv, f"{base}/search?q=three")
     assert st == 200 and body["numElements"] == 1

@@ -8,6 +8,8 @@ mondo group and the efo id), so the test exercises the hard case:
 clique fusion with canonical-id change and re-merge of absorbed nodes.
 """
 
+import os
+
 import pytest
 
 from grebi_spark.incremental import add_datasource, build_graph_stateful
@@ -125,11 +127,9 @@ def tri(spark):
     )
     state_base = build_graph_stateful(base_sources, CONFIG, prefix_map=PM)
     state_plus = build_graph_stateful(base_sources + [sssom], CONFIG, prefix_map=PM)
-    inc = add_datasource(state_base, sssom, prefix_map=PM, with_stats=True)
-    reduced = remove_datasource(state_plus, "sssom", with_stats=True)
-    upd = update_datasource(
-        state_plus, "sssom", sssom_v2, prefix_map=PM, with_stats=True
-    )
+    inc = add_datasource(state_base, sssom, prefix_map=PM)
+    reduced = remove_datasource(state_plus, "sssom")
+    upd = update_datasource(state_plus, "sssom", sssom_v2, prefix_map=PM)
     scratch_v2 = build_graph(base_sources + [sssom_v2], CONFIG, prefix_map=PM)
     return {
         "add": (state_plus.graph, inc),
@@ -162,24 +162,6 @@ def test_incremental_fuses_pre_existing_cliques(graphs):
     groups = {r["id"]: r["group_id"] for r in inc.graph.groups.collect()}
     # the added sssom row linked efo:0000537 into the mondo clique
     assert groups["efo:0000537"] == "mondo:0005044"
-
-
-def test_add_delta_inputs_are_delta_sized(graphs):
-    """The verdict-#4 gate: the delta stages must re-merge ONLY the
-    affected clique's rows, not the corpus — asserted via the recorded
-    input row counts of the delta path."""
-    full, inc = graphs
-    stats = inc.delta_stats
-    total = inc.graph.merged.count()
-    # affected after fusion: the mondo clique plus the ref:1 clique that
-    # REFERENCES the re-canonicalised efo id; the delta re-merge must
-    # process exactly those rows, nothing else
-    expected = full.merged.filter(
-        full.merged.node_id.isin(["mondo:0005044", "ref:1"])
-    ).count()
-    assert stats["n_delta_rows"] == expected
-    assert 0 < stats["n_delta_rows"] < total
-    assert 0 < stats["n_removed_rows"] < total
 
 
 def test_add_rewrites_cross_clique_reference(graphs):
@@ -266,20 +248,26 @@ def test_update_equals_full_rebuild(update_graphs, part):
     assert _canon(getattr(upd.graph, part)) == _canon(getattr(scratch, part)), part
 
 
-def test_update_moves_link_and_stays_delta_sized(update_graphs):
+def test_update_moves_link_and_stays_delta_sized(tri, update_graphs):
     scratch, upd = update_graphs
     groups = {r["id"]: r["group_id"] for r in upd.graph.groups.collect()}
     # the replacement moved the efo link from 0005044 to 0001134
     assert groups["efo:0000537"] == "mondo:0001134"
     assert groups.get("mondo:0005044", "mondo:0005044") != "mondo:0001134"
-    # fused remove∘add still touches only the two mondo cliques' rows
-    stats = upd.delta_stats
-    total = upd.graph.merged.count()
-    assert 0 < stats["n_delta_rows"] < total
-    assert 0 < stats["n_removed_rows"] < total
-    # cross-clique reference moved with the link
+    # the update's effect stays confined to the two mondo cliques and
+    # the ref:1 node that references the moved id: every other node's
+    # merged rows are exactly the pre-update graph's
     import pyspark.sql.functions as SF
 
+    plus_graph, _ = tri["add"]  # the pre-update graph (base + sssom v1)
+    touched = ["mondo:0005044", "mondo:0001134", "ref:1"]
+
+    def rest(g):
+        return _canon(g.merged.filter(~SF.col("node_id").isin(touched)))
+
+    assert rest(upd.graph) == rest(plus_graph)
+    assert upd.graph.merged.count() > len(rest(upd.graph)) > 0
+    # cross-clique reference moved with the link
     vals = [
         r["value"]
         for r in upd.graph.merged.filter(
@@ -347,170 +335,142 @@ def test_state_roundtrips_disk_and_resumes_maintenance(spark, tri, tmp_path):
         ), part
 
 
-def test_compact_state_preserves_values_and_flattens_plans(spark, tri):
-    """compact_state must be a value-identity that resets the chained
-    pass-through plans to flat checkpoint scans (no joins left in the
-    maintained tables' plans), and maintenance must continue on the
-    compacted state."""
+def test_successive_verbs_keep_rows_flat_and_equal_rebuild(spark):
+    """Five successive verbs (add, update, remove, add, update) on one
+    state: after every verb the retained rows are a flat checkpoint scan
+    with at most ``spark.sql.shuffle.partitions`` partitions — the
+    lineage and partition growth behind the old delta fold's
+    out-of-memory failures cannot build up — and the final graph equals
+    a from-scratch build of the same rows."""
     import contextlib
     import io
 
-    from grebi_spark.incremental import compact_state, remove_datasource
+    import pyspark.sql.functions as SF
+
+    from grebi_spark.incremental import remove_datasource, update_datasource
+
+    from .test_state_versions import _tiny_sources
+
+    a, b = _tiny_sources(spark)
+    b_half = b.filter(SF.col("prop_key") != "t:rel")
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    state = build_graph_stateful([a], CONFIG)
+    for verb in (
+        lambda s: add_datasource(s, b),
+        lambda s: update_datasource(s, "srcb", b_half),
+        lambda s: remove_datasource(s, "srcb"),
+        lambda s: add_datasource(s, b),
+        lambda s: update_datasource(s, "srcb", b_half),
+    ):
+        state = verb(state)
+        assert state.rows.rdd.getNumPartitions() <= nparts
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            state.rows.explain(mode="simple")
+        assert "Union" not in buf.getvalue() and "Filter" not in buf.getvalue()
+
+    scratch = build_graph_stateful([a, b_half], CONFIG)
+    for part in ("groups", "merged", "nodes", "edges", "display_types",
+                 "edge_summary"):
+        assert _canon(getattr(state.graph, part)) == _canon(
+            getattr(scratch.graph, part)
+        ), part
+
+
+def test_compact_state_preserves_values_and_flattens_plans(spark, tri):
+    """Every verb compacts the state it returns (there is no separate
+    compaction step): the retained rows are a flat checkpoint scan (no
+    union, filter or join of the input state's plan left), the graph is
+    value-identical to the from-scratch build, and maintenance continues
+    on the compacted state."""
+    import contextlib
+    import io
+
+    from grebi_spark.incremental import remove_datasource
 
     base_graph, _ = tri["remove"]
-    _, live = tri["add"]
-    compacted = compact_state(live)
+    plus_graph, live = tri["add"]
     for part in ("groups", "merged", "nodes", "edges"):
-        assert _canon(getattr(compacted.graph, part)) == _canon(
-            getattr(live.graph, part)
+        assert _canon(getattr(live.graph, part)) == _canon(
+            getattr(plus_graph, part)
         ), part
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        compacted.graph.merged.explain(mode="simple")
-    assert "Join" not in buf.getvalue()  # flat scan, chain gone
-    on_compacted = remove_datasource(compacted, "sssom")
+        live.rows.explain(mode="simple")
+    plan = buf.getvalue()
+    for op in ("Join", "Union", "Filter"):
+        assert op not in plan, f"{op} left in the retained rows' plan"
+    on_compacted = remove_datasource(live, "sssom")
     assert _canon(on_compacted.graph.merged) == _canon(base_graph.merged)
 
 
 def test_compact_state_resets_partition_inflation(spark, tri):
-    """Every verb's unions SUM their children's partition counts, so a
-    long verb chain inflates each maintained table to thousands of
-    near-empty partitions — and a bare localCheckpoint keeps the
-    inflated layout, so fold latency degrades into task-scheduling
-    overhead (measured 6× over 30 folds before the fix). compact_state
-    must coalesce each table back to the session's shuffle-partition
-    setting."""
-    from grebi_spark.incremental import compact_state
+    """A verb's union SUMs its children's partition counts, so without
+    compaction a long verb chain inflates the retained rows to thousands
+    of near-empty partitions and fold latency degrades into
+    task-scheduling overhead. Every verb must coalesce the rows back to
+    the session's shuffle-partition setting, however many verbs ran."""
+    from grebi_spark.incremental import add_datasource, remove_datasource
 
     _, live = tri["add"]
+    sssom = tri["sssom"]
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    compacted = compact_state(live)
-    for part in ("groups", "merged", "nodes", "edges"):
-        got = getattr(compacted.graph, part).rdd.getNumPartitions()
-        assert got <= nparts, f"{part}: {got} partitions after compaction"
-    assert compacted.rows.rdd.getNumPartitions() <= nparts
+    state = live
+    for _ in range(2):
+        state = add_datasource(remove_datasource(state, "sssom"), sssom, prefix_map=PM)
+        got = state.rows.rdd.getNumPartitions()
+        assert got <= nparts, f"{got} row partitions after a verb chain"
+    assert live.rows.rdd.getNumPartitions() <= nparts
+    assert _canon(state.graph.merged) == _canon(live.graph.merged)
+
+
+def _kv_dump(path):
+    import sqlite3
+
+    con = sqlite3.connect(path)
+    out = {
+        t: sorted(con.execute(f"SELECT * FROM {t}").fetchall())
+        for t in ("kv", "alias", "node", "edge")
+    }
+    con.close()
+    return out
+
+
+def _kv_swap_equals_fresh(before, after, tmp_path):
+    """Serve ``before``'s KV store, rebuild it at the same path from
+    ``after`` (the swap refresh), and compare every table with a fresh
+    build of ``after``."""
+    from grebi_spark.sinks.kv import build_kv_store
+
+    db = str(tmp_path / "maint.sqlite")
+    build_kv_store(before.merged, before.nodes, db, shards=2, edges=before.edges)
+    build_kv_store(after.merged, after.nodes, db, shards=2, edges=after.edges)
+    fresh = str(tmp_path / "fresh.sqlite")
+    build_kv_store(after.merged, after.nodes, fresh, shards=2, edges=after.edges)
+    assert _kv_dump(db) == _kv_dump(fresh)
+    assert not (tmp_path / "maint.sqlite.tmp").exists()
 
 
 def test_refresh_kv_store_equals_rebuild(tri, tmp_path):
-    """Serving-tier maintenance: after an incremental verb, refreshing
-    the EXECUTED sqlite KV store with the verb's last_delta must leave
-    every table (nodes, aliases, edges) content-identical to a
-    from-scratch build_kv_store of the new state — the same
-    value-identity-vs-rebuild contract the graph-side verbs carry,
-    extended to the serving artifact."""
-    import sqlite3
-
-    from grebi_spark.sinks.kv import build_kv_store, refresh_kv_store
-
-    state_base = tri["state_base"]
-    _scratch, inc = tri["add"]  # the post-add maintained state
-
-    db = str(tmp_path / "maint.sqlite")
-    build_kv_store(
-        state_base.graph.merged, state_base.graph.nodes, db,
-        shards=2, edges=state_base.graph.edges,
-    )
-    counts = refresh_kv_store(inc, db, shards=2)
-    assert counts["nodes"] > 0 and counts["deleted_nodes"] > 0
-
-    fresh = str(tmp_path / "fresh.sqlite")
-    build_kv_store(
-        inc.graph.merged, inc.graph.nodes, fresh,
-        shards=2, edges=inc.graph.edges,
-    )
-
-    def dump(path):
-        con = sqlite3.connect(path)
-        out = {
-            t: sorted(con.execute(f"SELECT * FROM {t}").fetchall())
-            for t in ("kv", "alias", "node", "edge")
-        }
-        con.close()
-        return out
-
-    assert dump(db) == dump(fresh)
-
-    # a from-scratch state carries no delta: refresh must refuse loudly
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="last_delta"):
-        refresh_kv_store(state_base, db)
-
-
-def test_solr_delta_equals_rebuild(tri):
-    """The search-core twin of the KV refresh: applying solr_delta_docs
-    (delete by id + upsert by id, Solr's native maintenance verbs) to
-    the PRE-verb docs must reproduce the from-scratch docs of the new
-    state exactly — including re-rendered docs of unchanged-graph nodes
-    whose <prop>_names embed a changed clique's names."""
-    import pyspark.sql.functions as SF
-
-    from grebi_spark.sinks.solr_jsonl import (
-        solr_delta_docs,
-        solr_edge_docs,
-        solr_node_docs,
-    )
-
-    state_base = tri["state_base"]
-    _scratch, inc = tri["add"]
-
-    def js(df):
-        return sorted(
-            r[0]
-            for r in df.select(
-                SF.to_json(SF.struct(*sorted(df.columns)))
-            ).collect()
-        )
-
-    delta = solr_delta_docs(inc)
-
-    old_docs = solr_node_docs(state_base.graph.merged, state_base.graph.nodes)
-    up_ids = {
-        r["grebi__nodeId"]
-        for r in delta["node_upserts"].select("grebi__nodeId").collect()
-    }
-    del_ids = {r["grebi__nodeId"] for r in delta["node_deletions"].collect()}
-    kept = old_docs.filter(
-        ~SF.col("grebi__nodeId").isin(list(up_ids | del_ids))
-    )
-    applied = sorted(js(kept) + js(delta["node_upserts"]))
-    assert applied == js(solr_node_docs(inc.graph.merged, inc.graph.nodes))
-    # the backward-propagation case really occurs: some upserted doc's
-    # node is NOT in the re-merged delta (it only embeds changed names)
-    delta_ids = {
-        r["node_id"]
-        for r in inc.last_delta["merged_delta"].select("node_id").distinct().collect()
-    }
-    assert up_ids - delta_ids, "expected a names-embed-only re-render"
-
-    old_edges = solr_edge_docs(state_base.graph.edges)
-    up_e = delta["edge_upserts"]
-    up_e_ids = {r["grebi__edgeId"] for r in up_e.select("grebi__edgeId").collect()}
-    del_e = {r["grebi__edgeId"] for r in delta["edge_deletions"].collect()}
-    # order-independence contract: the sets are disjoint, so a consumer
-    # may delete after (or concurrently with) upserting
-    assert up_e_ids.isdisjoint(del_e)
-    kept_e = old_edges.filter(
-        ~SF.col("grebi__edgeId").isin(list(up_e_ids | del_e))
-    )
-    applied_e = sorted(js(kept_e) + js(up_e))
-    assert applied_e == js(solr_edge_docs(inc.graph.edges))
+    """Serving-tier maintenance: after a verb, rebuilding the EXECUTED
+    sqlite KV store at its served path must leave every table (nodes,
+    aliases, edges) content-identical to a from-scratch build of the new
+    graph — no row of the old store survives the swap."""
+    _kv_swap_equals_fresh(tri["state_base"].graph, tri["add"][1].graph, tmp_path)
 
 
 def test_stream_maintenance_refreshes_serving_store_per_fold(spark, sf_dir, tmp_path):
     """The END-TO-END continuous loop: dump lands → streaming fold grows
     the graph (add_datasource in foreachBatch) → the SERVING store is
-    refreshed with that fold's delta — per micro-batch. After two dumps
-    land across two availableNow drains of one checkpoint, the sqlite KV
-    must be table-for-table identical to a from-scratch build of the
-    final state: the whole pipeline, graph and serving tier both, is
-    maintained delta-wise."""
+    rebuilt at its served path — per micro-batch. After two dumps land
+    across two availableNow drains of one checkpoint, the sqlite KV must
+    be table-for-table identical to a from-scratch build of the final
+    state: graph and serving tier are maintained together."""
     import json
-    import sqlite3
 
     from grebi_spark.incremental import build_graph_stateful
     from grebi_spark.plans.parity import PARITY_CONFIG, _star_graph_long
-    from grebi_spark.sinks.kv import build_kv_store, refresh_kv_store
+    from grebi_spark.sinks.kv import build_kv_store
     from grebi_spark.sources import pysource
 
     pysource.register(spark)
@@ -537,7 +497,8 @@ def test_stream_maintenance_refreshes_serving_store_per_fold(spark, sf_dir, tmp_
         holder["state"] = add_datasource(
             holder["state"], batch_df.localCheckpoint()
         )
-        refresh_kv_store(holder["state"], db, shards=2)
+        g = holder["state"].graph
+        build_kv_store(g.merged, g.nodes, db, shards=2, edges=g.edges)
 
     def drain():
         q = (
@@ -561,16 +522,7 @@ def test_stream_maintenance_refreshes_serving_store_per_fold(spark, sf_dir, tmp_
     g = holder["state"].graph
     build_kv_store(g.merged, g.nodes, fresh, shards=2, edges=g.edges)
 
-    def dump(path):
-        con = sqlite3.connect(path)
-        out = {
-            t: sorted(con.execute(f"SELECT * FROM {t}").fetchall())
-            for t in ("kv", "alias", "node", "edge")
-        }
-        con.close()
-        return out
-
-    maintained, rebuilt = dump(db), dump(fresh)
+    maintained, rebuilt = _kv_dump(db), _kv_dump(fresh)
     assert maintained == rebuilt
     assert len(maintained["kv"]) > 0 and len(maintained["edge"]) > 0
 
@@ -581,73 +533,15 @@ def test_refresh_kv_store_after_remove(tri, tmp_path):
     store must drop the vanished ids and re-render the split cliques,
     landing table-for-table identical to a from-scratch build of the
     reduced state."""
-    import sqlite3
-
-    from grebi_spark.sinks.kv import build_kv_store, refresh_kv_store
-
     plus_graph, _inc = tri["add"]  # the pre-remove (fused) graph
-    _scratch, reduced = tri["remove"]
-
-    db = str(tmp_path / "maint.sqlite")
-    build_kv_store(
-        plus_graph.merged, plus_graph.nodes, db,
-        shards=2, edges=plus_graph.edges,
-    )
-    counts = refresh_kv_store(reduced, db, shards=2)
-    assert counts["deleted_nodes"] > 0
-
-    fresh = str(tmp_path / "fresh.sqlite")
-    build_kv_store(
-        reduced.graph.merged, reduced.graph.nodes, fresh,
-        shards=2, edges=reduced.graph.edges,
-    )
-
-    def dump(path):
-        con = sqlite3.connect(path)
-        out = {
-            t: sorted(con.execute(f"SELECT * FROM {t}").fetchall())
-            for t in ("kv", "alias", "node", "edge")
-        }
-        con.close()
-        return out
-
-    assert dump(db) == dump(fresh)
+    _kv_swap_equals_fresh(plus_graph, tri["remove"][1].graph, tmp_path)
 
 
 def test_refresh_kv_store_after_update(tri, tmp_path):
-    """update = remove∘add fused in ONE _delta_finish pass — its single
-    last_delta must carry the complete serving delta: the refreshed
-    store equals a from-scratch build of the replaced-source state."""
-    import sqlite3
-
-    from grebi_spark.sinks.kv import build_kv_store, refresh_kv_store
-
+    """The refreshed store after an update equals a from-scratch build
+    of the replaced-source state."""
     plus_graph, _inc = tri["add"]  # the pre-update graph (base + sssom)
-    _scratch_v2, upd = tri["update"]
-
-    db = str(tmp_path / "maint.sqlite")
-    build_kv_store(
-        plus_graph.merged, plus_graph.nodes, db,
-        shards=2, edges=plus_graph.edges,
-    )
-    refresh_kv_store(upd, db, shards=2)
-
-    fresh = str(tmp_path / "fresh.sqlite")
-    build_kv_store(
-        upd.graph.merged, upd.graph.nodes, fresh,
-        shards=2, edges=upd.graph.edges,
-    )
-
-    def dump(path):
-        con = sqlite3.connect(path)
-        out = {
-            t: sorted(con.execute(f"SELECT * FROM {t}").fetchall())
-            for t in ("kv", "alias", "node", "edge")
-        }
-        con.close()
-        return out
-
-    assert dump(db) == dump(fresh)
+    _kv_swap_equals_fresh(plus_graph, tri["update"][1].graph, tmp_path)
 
 
 def test_stream_maintenance_survives_driver_restart(spark, sf_dir, tmp_path):
@@ -726,22 +620,19 @@ def test_stream_maintenance_survives_driver_restart(spark, sf_dir, tmp_path):
     assert profile(h2["state"].graph.merged) == profile(scratch.merged)
 
 def test_executed_solr_core_refresh_equals_rebuild(spark, tri, tmp_path):
-    """The EXECUTED search core (segment/tombstone layout): build from
-    the pre-verb state, refresh with the verb's delta, and the live
-    read-back must equal a from-scratch core of the new state exactly —
-    nodes and edges both. The refresh writes ONLY a new segment +
-    tombstones: every pre-existing segment file is bit-untouched (the
-    delta-sized-write contract, Lucene's immutable-segment shape)."""
-    import os
+    """The EXECUTED search core: build it from the pre-verb state, then
+    rebuild it at the same root from the verb's graph (the swap
+    refresh). Its docs and every table of its serving file must equal a
+    from-scratch core of the new state — nodes and edges both — and a
+    search served from it must equal one served from scratch."""
+    import sqlite3
 
     import pyspark.sql.functions as SF
 
     from grebi_spark.sinks.solr_jsonl import (
         build_solr_core,
-        compact_solr_core,
         core_db_path,
         read_solr_core,
-        refresh_solr_core,
     )
 
     state_base = tri["state_base"]
@@ -751,21 +642,8 @@ def test_executed_solr_core_refresh_equals_rebuild(spark, tri, tmp_path):
     build_solr_core(
         state_base.graph.merged, state_base.graph.nodes, state_base.graph.edges, root
     )
-    before = {}
-    for dirpath, _dirs, files in os.walk(f"{root}/nodes/segments"):
-        for f in files:
-            p = os.path.join(dirpath, f)
-            before[p] = (os.path.getmtime(p), os.path.getsize(p))
-
-    counts = refresh_solr_core(spark, inc, root)
-    assert counts["node_upserts"] > 0
-
-    # old segment files bit-untouched
-    for p, sig in before.items():
-        assert os.path.exists(p) and (
-            os.path.getmtime(p),
-            os.path.getsize(p),
-        ) == sig, f"refresh rewrote a sealed segment file: {p}"
+    build_solr_core(inc.graph.merged, inc.graph.nodes, inc.graph.edges, root)
+    assert not os.path.exists(core_db_path(root) + ".tmp")
 
     def js(df):
         return sorted(
@@ -781,8 +659,6 @@ def test_executed_solr_core_refresh_equals_rebuild(spark, tri, tmp_path):
         ), f"refreshed {kind} core != from-scratch core"
 
     # the serving file: every table equals the from-scratch one
-    import sqlite3
-
     def dump(r):
         con = sqlite3.connect(core_db_path(r))
         out = {
@@ -813,19 +689,64 @@ def test_executed_solr_core_refresh_equals_rebuild(spark, tri, tmp_path):
 
     assert serve(root) == serve(scratch_root)
 
-    # compaction folds segments and preserves content exactly
-    live_before = js(read_solr_core(spark, root, "nodes"))
-    merged_away = compact_solr_core(spark, root)
-    assert merged_away >= 1
-    assert js(read_solr_core(spark, root, "nodes")) == live_before
-    # refresh still works on a compacted core (next seg = 1)
-    with __import__("pytest").raises(ValueError, match="last_delta"):
-        refresh_solr_core(spark, tri["state_base"], root)
 
+def test_store_rebuild_is_atomic_for_readers(tri, tmp_path):
+    """Rebuilding served stores is a swap: a reader thread looping
+    kv_store_get, search_core_docs and suggest_core_docs while both
+    stores are rebuilt from the verb's graph gets, on every request, the
+    old graph's answer or the new one's — never an exception (a missing
+    file) or a half-loaded store."""
+    import threading
 
-def test_solr_refresh_requires_existing_core(spark, tri, tmp_path):
-    from grebi_spark.sinks.solr_jsonl import refresh_solr_core
+    from grebi_spark.sinks.kv import build_kv_store, kv_store_get
+    from grebi_spark.sinks.solr_jsonl import (
+        build_solr_core,
+        search_core_docs,
+        suggest_core_docs,
+    )
 
-    _scratch, inc = tri["add"]
-    with __import__("pytest").raises(ValueError, match="no core"):
-        refresh_solr_core(spark, inc, str(tmp_path / "nowhere"))
+    def build(g, root):
+        kv, core = os.path.join(root, "kv.sqlite"), os.path.join(root, "core")
+        build_kv_store(g.merged, g.nodes, kv, shards=2, edges=g.edges)
+        build_solr_core(g.merged, g.nodes, g.edges, core)
+        return kv, core
+
+    def ask(kv, core):
+        return (
+            kv_store_get(kv, ["efo:0000537", "mondo:0005044", "ref:1"]),
+            search_core_docs(core, "mondo")[0],
+            suggest_core_docs(core, "h"),
+        )
+
+    old, new = tri["state_base"].graph, tri["add"][1].graph
+    want_new = ask(*build(new, str(tmp_path / "new")))
+    kv, core = build(old, str(tmp_path / "served"))
+    want_old = ask(kv, core)
+    assert want_old != want_new
+
+    seen, errors, stop = [], [], threading.Event()
+
+    def reader():
+        while not stop.is_set():
+            try:
+                seen.append(ask(kv, core))
+            except Exception as exc:  # noqa: BLE001 — asserted below
+                errors.append(exc)
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        assert build(new, str(tmp_path / "served")) == (kv, core)
+        n = len(seen)
+        while len(seen) < n + 5 and t.is_alive():
+            stop.wait(0.05)
+    finally:
+        stop.set()
+        t.join(timeout=60)
+    assert not t.is_alive()
+    assert errors == []
+    # each store is swapped on its own, so each answer (not the tuple)
+    # is the old graph's or the new one's
+    for i in range(3):
+        assert all(a[i] in (want_old[i], want_new[i]) for a in seen), i
+    assert seen[0] == want_old and seen[-1] == want_new

@@ -190,13 +190,13 @@ def test_rollback_on_flat_layout_raises(spark):
 
 @pytest.fixture(scope="module")
 def mroot(spark):
-    """A second, never-pruned v1(full) -> fold -> v2(delta) root for the
-    manifest-property tests (the lifecycle fixture's root is pruned by
-    the pointer-lifecycle test)."""
+    """A second, never-pruned v1 -> verb -> v2 root for the round-trip
+    test (the lifecycle fixture's root is pruned by the pointer-lifecycle
+    test)."""
     from grebi_spark.incremental import add_datasource, build_graph_stateful
 
     a, b = _tiny_sources(spark)
-    root = tempfile.mkdtemp(prefix="grebi_state_manifest_")
+    root = tempfile.mkdtemp(prefix="grebi_state_roundtrip_")
     s1 = build_graph_stateful([a], CONFIG)
     save_state_version(s1, root)
     s2 = add_datasource(s1, b)
@@ -217,36 +217,9 @@ def _rows_canon(df):
     ), sorted(df.columns)
 
 
-def test_delta_save_shares_base_files_and_writes_only_deltas(spark, mroot):
-    """The manifest contract: v2 (one fold after v1) must reference v1's
-    base segments BY PATH — no corpus frame is rewritten — and every
-    data directory new in v2 must be a v2-named delta artifact
-    (seg/del/agg). This is the property that makes snapshot cost track
-    the fold's delta instead of the corpus (the full-corpus-rewrite
-    snapshot was round 6's one surviving scale-killer)."""
-    import json
-
-    root = mroot["root"]
-    m1 = json.load(open(os.path.join(root, "v1", "manifest.json")))
-    m2 = json.load(open(os.path.join(root, "v2", "manifest.json")))
-    for fname, levels1 in m1["frames"].items():
-        levels2 = m2["frames"][fname]
-        # v1's levels are a shared prefix of v2's: same paths, no copies
-        assert levels2[: len(levels1)] == levels1, fname
-        assert len(levels2) > len(levels1), f"{fname}: fold added no level"
-        for lv in levels2[len(levels1):]:
-            for key in ("seg", "agg"):
-                if lv.get(key):
-                    assert "-v2-" in lv[key], lv[key]
-            for d in lv.get("dels", []):
-                assert "-v2-" in d[1], d[1]
-
-
-def test_all_frames_roundtrip_through_delta_manifest(spark, mroot):
-    """Every one of the 12 durable frames — row frames via
-    segment+tombstone folding, count frames via signed-delta summation —
-    must reload from the DELTA manifest value-identical to the live
-    maintained state."""
+def test_all_frames_roundtrip_through_a_version(spark, mroot):
+    """Every one of the 12 durable frames must reload from a published
+    version value-identical to the live maintained state."""
     from grebi_spark.incremental import (
         _STATE_FRAMES,
         _state_frames_dict,
@@ -261,84 +234,11 @@ def test_all_frames_roundtrip_through_delta_manifest(spark, mroot):
         assert _rows_canon(reloaded[fname]) == _rows_canon(live[fname]), fname
 
 
-def test_reloaded_state_bucketed_join_plans_no_exchange(spark, mroot):
-    """The bucketed-durable-state gate: a node-keyed join between two
-    reloaded node-keyed frames (merged ⋈ nodes, both bucketed by node_id
-    in the full base) must plan with NO Exchange on either side even
-    with broadcast disabled — the layout that deletes the probe shuffle
-    from every delta verb against reloaded state at 100 TB."""
-    from grebi_spark.incremental import load_state_version
-
-    st = load_state_version(spark, mroot["root"], "v1")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = st.graph.merged.join(
-            st.graph.nodes.select("node_id", "types"), "node_id"
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert j.count() == st.graph.merged.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_compact_state_versions_resets_chains_and_prune_reclaims(spark):
-    """Major compaction: rewrite CURRENT as a fresh full base (chain
-    length 1 per frame), value-identical; a following prune sweeps every
-    data directory the retained manifest no longer references."""
-    import json
-
-    from grebi_spark.incremental import (
-        add_datasource,
-        build_graph_stateful,
-        compact_state_versions,
-        load_state_current,
-        prune_state_versions,
-        save_state_version,
-    )
-
-    a, b = _tiny_sources(spark)
-    root = tempfile.mkdtemp(prefix="grebi_state_compact_")
-    s1 = build_graph_stateful([a], CONFIG)
-    save_state_version(s1, root)
-    s2 = add_datasource(s1, b)
-    save_state_version(s2, root)
-    before = _canon(load_state_current(spark, root).graph.merged)
-
-    v3 = compact_state_versions(spark, root)
-    m3 = json.load(open(os.path.join(root, v3, "manifest.json")))
-    assert all(len(levels) == 1 for levels in m3["frames"].values())
-    assert _canon(load_state_current(spark, root).graph.merged) == before
-
-    prune_state_versions(spark, root)
-    # reachability sweep: only v3's full segments survive in the pool
-    for fname in m3["frames"]:
-        segs = os.listdir(os.path.join(root, "data", fname))
-        assert all(f"-{v3}-" in s for s in segs), (fname, segs)
-    assert _canon(load_state_current(spark, root).graph.merged) == before
-
-
-def test_delta_manifest_read_plans_broadcast_antis_only(spark, mroot):
-    """The merge-on-read chain's shuffle contract: reading a frame from
-    a DELTA manifest (base segment + fold level) must apply tombstones
-    as BROADCAST anti-joins — no sort-merge join, no Exchange of the
-    corpus side introduced by the level folding."""
-    from grebi_spark.incremental import load_state_version
-
-    st = load_state_version(spark, mroot["root"], "v2")
-    plan = st.graph.merged._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "Exchange hashpartitioning" not in plan, plan
-
-
 def test_manifest_versions_across_all_three_verbs(spark):
-    """One chain exercising every verb's durable FrameLevels — add
-    (segments), remove (datasource tombstone, no adds), update (TWO
-    groups levels) — each fold snapshotted as a delta manifest; every
-    version must reload value-identical to the live state it captured,
-    and time travel must survive the final prune of retired versions'
-    unreferenced files."""
+    """One chain exercising every verb — add, remove, update — each
+    result snapshotted as a version; every version must reload
+    value-identical to the live state it captured, and the kept version
+    must survive the final prune of the retired ones."""
     from grebi_spark.incremental import (
         add_datasource,
         build_graph_stateful,
@@ -391,28 +291,21 @@ def test_manifest_versions_across_all_three_verbs(spark):
         got = load_state_version(spark, root, vname)
         assert _canon(got.graph.merged) == want, vname
 
-    # prune retires v1-v3 and their unreferenced delta files; the kept
-    # manifest still reloads exactly
+    # prune retires v1-v3; the kept version still reloads exactly
     prune_state_versions(spark, root)
     assert _canon(load_state_current(spark, root).graph.merged) == live["v4"]
 
 
 def test_multi_fold_snapshot_composes_one_level_per_frame(spark):
-    """THREE verbs between snapshots must persist as ONE composed level
-    per frame (tombstones unioned per column, earlier adds passed
-    through later tombstones) — snapshot write count and read-chain
-    growth are per SNAPSHOT, not per fold — and the reload must be
-    value-identical across all 12 frames."""
-    import json
-
+    """THREE verbs between snapshots must persist as ONE version holding
+    one directory per frame — snapshot writes are per SNAPSHOT, not per
+    verb — and the reload must be value-identical across all 12
+    frames."""
     from grebi_spark.incremental import (
         _STATE_FRAMES,
         _state_frames_dict,
-        add_datasource,
-        build_graph_stateful,
         load_state_version,
         remove_datasource,
-        save_state_version,
     )
 
     a, b = _tiny_sources(spark)
@@ -433,34 +326,17 @@ def test_multi_fold_snapshot_composes_one_level_per_frame(spark):
     s = remove_datasource(s, "srcb")
     v2 = save_state_version(s, root)
 
-    m2 = json.load(open(os.path.join(root, v2, "manifest.json")))
-    assert all(len(levels) == 2 for levels in m2["frames"].values()), {
-        k: len(v) for k, v in m2["frames"].items()
+    entries = [n for n in os.listdir(root) if not n.startswith(".")]  # .crc
+    assert sorted(entries) == ["CURRENT", "v1", "v2"]
+    frames = {
+        d for d in os.listdir(os.path.join(root, v2))
+        if os.path.isdir(os.path.join(root, v2, d))
     }
+    assert frames == set(_STATE_FRAMES) | {"config"}
     live = _state_frames_dict(s)
     reloaded = _state_frames_dict(load_state_version(spark, root, v2))
     for fname in _STATE_FRAMES:
         assert _rows_canon(reloaded[fname]) == _rows_canon(live[fname]), fname
-
-
-def test_bucketed_seg_catalog_entries_are_transient(spark, mroot):
-    """Reopening a bucketed segment must not leak a permanent catalog
-    table: the entry is created, eagerly resolved into the returned
-    DataFrame, and dropped (mirroring the writer) — a permanent entry
-    would dangle at a deleted LOCATION after compaction/prune removes
-    the segment, for the whole warehouse lifetime."""
-    from grebi_spark.incremental import load_state_version
-
-    st = load_state_version(spark, mroot["root"], "v1")
-    # the load resolved bucketed base segments; no snap table may linger
-    leaked = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith("grebi_snap_")
-    ]
-    assert leaked == [], leaked
-    # and the resolved frames stay readable after the drop
-    assert st.graph.merged.count() > 0
 
 
 def test_concurrent_publishers_get_disjoint_versions_and_sane_pointer(spark):
@@ -541,59 +417,13 @@ def test_publish_lock_stale_break_and_timeout(spark):
     assert not os.path.exists(lock)
 
 
-def test_maintain_state_versions_bounds_the_chain(spark):
-    """The AUTO-compaction policy: repeated folds grow the manifest
-    level chain one level per save; maintain_state_versions(max_chain)
-    must leave it alone within bounds, compact past them (chain resets
-    to 1), and preserve VALUES exactly — the bounded-reload contract
-    the 50-fold soak measures at scale."""
-    from grebi_spark.incremental import (
-        maintain_state_versions,
-        remove_datasource,
-        state_chain_length,
-    )
-
-    a, b = _tiny_sources(spark)
-    root = tempfile.mkdtemp(prefix="grebi_chain_policy_")
-    s = build_graph_stateful([a], CONFIG)
-    save_state_version(s, root)
-    assert state_chain_length(spark, root) == 1
-    # within bounds: a no-op
-    assert maintain_state_versions(spark, root, max_chain=3) is None
-
-    observed = []
-    for i in range(6):
-        st = load_state_current(spark, root)
-        ds_b = b.select("datasource").first()["datasource"]
-        st2 = (
-            add_datasource(st, b)
-            if i % 2 == 0
-            else remove_datasource(st, ds_b)
-        )
-        save_state_version(st2, root)
-        maintain_state_versions(spark, root, max_chain=3)
-        observed.append(state_chain_length(spark, root))
-    # the chain never runs away: compaction resets it to 1 whenever a
-    # save pushes past max_chain
-    assert max(observed) <= 4, observed
-    assert 1 in observed, observed  # at least one compaction fired
-
-    # value identity: the maintained root serves exactly the from-
-    # scratch state of the same verb sequence (6 folds end on remove)
-    final = load_state_current(spark, root)
-    ref = build_graph_stateful([a], CONFIG)
-    assert _canon(final.graph.merged) == _canon(ref.graph.merged)
-    assert _canon(final.graph.edges) == _canon(ref.graph.edges)
-
-
 def test_crash_mid_write_level_orphan_segments_ignored_and_pruned(spark):
-    """A save killed MID-_write_level leaves partial data segments in
-    the shared pool with no manifest referencing them (the manifest
-    write and publication come last). Readers must never see them —
-    resolution goes pointer → manifest → referenced paths only — and
-    prune_state_versions must sweep them as unreachable garbage. Runs
-    on a PRIVATE root: the sweep prunes old versions too, which the
-    shared mroot fixture must never experience."""
+    """A save killed mid-write leaves a claimed, uncommitted version
+    directory holding partial frame files (the commit marker and the
+    pointer swing come last). Readers must never see them — resolution
+    goes pointer → committed version only — and prune_state_versions
+    must sweep them as debris. Runs on a PRIVATE root: the sweep prunes
+    old versions too."""
     import os
 
     from grebi_spark.incremental import (
@@ -607,18 +437,12 @@ def test_crash_mid_write_level_orphan_segments_ignored_and_pruned(spark):
     save_state_version(s1, root)
     s2 = add_datasource(s1, b)
     save_state_version(s2, root)
-    # fabricate the crash artifacts: a half-written delta segment and a
-    # torn tombstone set for a would-have-been v9, plus a claimed-but-
-    # never-committed version directory (the CAS claim marker)
-    orphan_seg = os.path.join(root, "data", "merged", "seg-v9-0")
-    os.makedirs(orphan_seg)
-    with open(os.path.join(orphan_seg, "part-00000.parquet"), "wb") as fh:
+    # fabricate the crash artifacts: a claimed-but-never-committed v9
+    # whose merged frame was torn mid-write
+    torn = os.path.join(root, "v9", "merged")
+    os.makedirs(torn)
+    with open(os.path.join(torn, "part-00000.parquet"), "wb") as fh:
         fh.write(b"PAR1 torn mid-write")
-    orphan_del = os.path.join(root, "data", "merged", "del-v9-0-node_id")
-    os.makedirs(orphan_del)
-    with open(os.path.join(orphan_del, "part-00000.parquet"), "wb") as fh:
-        fh.write(b"PAR1 torn too")
-    os.makedirs(os.path.join(root, "v9"))
     open(os.path.join(root, "v9", "_CLAIMED"), "w").close()
     # the crash happened an hour ago: the claim marker has aged past the
     # DEFAULT grace window, so the sweep treats it as debris, not as an
@@ -632,14 +456,12 @@ def test_crash_mid_write_level_orphan_segments_ignored_and_pruned(spark):
     # the orphans are invisible: the served state is exactly v2's
     cur = load_state_current(spark, root)
     assert _canon(cur.graph.merged) == before
-    # ...and the reachability sweep deletes them
+    # ...and the sweep deletes them
     prune_state_versions(spark, root)
-    assert not os.path.exists(orphan_seg)
-    assert not os.path.exists(orphan_del)
     assert not os.path.exists(os.path.join(root, "v9"))
     after = load_state_current(spark, root)
     assert _canon(after.graph.merged) == before
-    # re-snapshot onto the pruned root still works (fresh claim → v10+)
+    # re-snapshot onto the pruned root still works (fresh claim)
     s3 = load_state_current(spark, root)
     vname = save_state_version(s3, root)
     assert vname not in ("v1", "v2")
@@ -681,16 +503,14 @@ def test_prune_claim_grace_spares_inflight_publisher(spark):
 
 
 def test_prune_spares_inflight_publishers_data_segments(spark, monkeypatch):
-    """THE concurrent-prune data race: ``save_state_version`` lands its
-    delta SEGMENTS (the longest phase) before its manifest, so a
-    maintenance prune racing the save sees fresh seg-/del-/agg-<vname>
-    dirs referenced by NO committed manifest. Sparing the publisher's
-    version DIRECTORY is not enough — the orphan sweep must also spare
-    its data segments, or the publisher commits a manifest pointing at
-    deleted files. Interleaves a graced prune at exactly the race point
-    (after the level writes, before the manifest write) inside a REAL
-    save and proves the committed version loads row-identical."""
-    import grebi_spark.incremental as inc
+    """The concurrent-prune data race: ``save_state_version`` writes
+    its frames (the longest phase) before it commits, so a maintenance
+    prune racing the save sees an uncommitted version directory full of
+    fresh data. The graced sweep must spare it, or the publisher commits
+    a version whose files are gone. Interleaves a graced prune at exactly
+    the race point (after the frame writes, before the publish) inside a
+    REAL save and proves the committed version loads row-identical."""
+    import grebi_spark.fsutil as fsutil
     from grebi_spark.incremental import load_state_version
 
     a, b = _tiny_sources(spark)
@@ -700,31 +520,28 @@ def test_prune_spares_inflight_publishers_data_segments(spark, monkeypatch):
     s2 = add_datasource(s1, b)
     want = _canon(s2.graph.merged)
 
-    real_write_text = inc._write_text
+    real_publish = fsutil.publish_version
     raced: dict = {}
 
-    def racing_write_text(spark_, path, text):
-        if path.endswith("/manifest.json") and "report" not in raced:
-            # segments are on disk, manifest is not: the race point
-            raced["report"] = prune_state_versions(
-                spark_, root, claim_grace_sec=600, report=True
-            )
-        real_write_text(spark_, path, text)
+    def racing_publish(spark_, root_, vname_):
+        # frames are on disk, the version is not committed: the race point
+        raced["report"] = prune_state_versions(
+            spark_, root, claim_grace_sec=600, report=True
+        )
+        real_publish(spark_, root_, vname_)
 
-    monkeypatch.setattr(inc, "_write_text", racing_write_text)
+    monkeypatch.setattr(fsutil, "publish_version", racing_publish)
     vname = save_state_version(s2, root)
     monkeypatch.undo()
 
     rep = raced["report"]
     assert vname in rep["spared_claims"], rep
-    # the publisher's freshly written segments survived the sweep: its
+    # the publisher's freshly written frames survived the sweep: its
     # committed version (and the now-serving state) load row-identical
     assert _canon(load_state_version(spark, root, vname).graph.merged) == want
     assert _canon(load_state_current(spark, root).graph.merged) == want
     # the report shape is the GC observability surface
-    assert set(rep) == {
-        "versions_removed", "orphan_segments_removed", "spared_claims"
-    }
+    assert set(rep) == {"versions_removed", "spared_claims"}
 
 
 def test_publish_lock_owner_token_and_stale_break_safety(spark):
