@@ -52,24 +52,6 @@ def assign_ids(
         F.array_sort(F.collect_set("id")).alias("source_ids"),
         F.min("id").alias("first_id"),
     )
-    # fast path: with no equivalence groups every rewrite is the identity —
-    # skip three joins (common in parity runs and per-datasource smoke jobs)
-    has_groups = groups.limit(1).count() > 0
-    if not has_groups:
-        return nodes_long.join(
-            entity_ids.withColumn("node_id", F.col("first_id")).drop("first_id"),
-            ["datasource", "entity_id"],
-            "inner",
-        ).select(
-            "subgraph",
-            "datasource",
-            "node_id",
-            "source_ids",
-            "prop_key",
-            "value",
-            "value_props",
-        )
-
     g = groups.select(F.col("id").alias("__gid_in"), F.col("group_id").alias("__gid_out"))
     entity_ids = (
         entity_ids.join(g, entity_ids.first_id == g.__gid_in, "left")

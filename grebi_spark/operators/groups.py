@@ -1,21 +1,15 @@
 """N3 — equivalence grouping: connected components + canonical-id election.
 
-The reference runs a single-threaded union-find needing up to 300 GB RAM
-(02_assign_ids/grebi_identifiers2groups/src/main.rs:24-158,
-nextflow/codon_nextflow.config:3-6). That is the one stage of the pipeline
-that fundamentally does not scale; here it becomes a distributed
-fixed-point label propagation:
-
-    label(v) ← min(label(v), min over neighbours' labels)
-
-iterated until no label changes. Identifier-equivalence graphs are unions
-of near-cliques (every entity contributes a star over its aliases), so the
-effective diameter is tiny (≈2–4) and the loop converges in a handful of
-iterations; each iteration is one shuffle join + aggregate, and
-``localCheckpoint`` truncates the plan lineage so the loop stays O(1) per
-round. Pointer jumping halves a chain's distance to its root every
-round, so even a high-diameter chain converges in O(log diameter)
-rounds.
+Connected components are computed as the reference computes them
+(02_assign_ids/grebi_identifiers2groups/src/main.rs:24-158): one
+union-find over all identifier pairs. The pairs are collected to the
+driver in one Spark job, the union-find runs there over int codes, and
+the (id, component) table goes back as one frame. Memory: the driver
+holds the pair list and one code per distinct id, as the reference holds
+its union-find in RAM (nextflow/codon_nextflow.config:3-6). The job
+count does not depend on the graph: a distributed propagation loop needs
+rounds that grow with the diameter, each a few Spark jobs, and a build is
+bound by job latency, not data.
 
 Canonical id per component = argmin by the reference's readability score
 (grebi:* wins, then biolink:*, then CURIE-ish, then most-alphabetic —
@@ -26,6 +20,8 @@ from __future__ import annotations
 
 import sys
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -43,139 +39,51 @@ def id_score(col: Column) -> Column:
     )
 
 
-# Label tables at or under this row count take the broadcast round (the
-# whole per-round update as ONE shuffle + two map-side hash joins against
-# the broadcast labels); larger graphs keep the shuffle-join round. The
-# guard is exact (a count of the materialized init frame): fast path
-# only when provably safe, identical results either way.
-_CC_BCAST_MAX_LABELS = 2_000_000
+def _union_find_roots(edges: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(src, dst) edges → (ids, roots): the sorted distinct ids of the
+    non-self-loop edges, and for each id the code (index into ``ids``) of
+    its component's minimum id.
+
+    One collect of the pairs, then union-find on the driver with path
+    halving, always linking the larger root under the smaller. Every
+    link and every halving step moves a parent to a smaller code, so
+    ``parent[i] <= i`` throughout and one ascending pass compresses every
+    vertex straight onto its root, which is the component's minimum code.
+    """
+    pairs = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).toPandas()
+    n_pairs = len(pairs)
+    # sorted codes: code order is code-point order, the order Spark's
+    # min uses on (UTF-8 byte-compared) strings
+    codes, ids = pd.factorize(
+        pd.concat([pairs["src"], pairs["dst"]], ignore_index=True), sort=True
+    )
+    parent = list(range(len(ids)))
+    for a, b in zip(codes[:n_pairs].tolist(), codes[n_pairs:].tolist()):
+        while parent[a] != a:
+            parent[a] = a = parent[parent[a]]
+        while parent[b] != b:
+            parent[b] = b = parent[parent[b]]
+        if a < b:
+            parent[b] = a
+        elif b < a:
+            parent[a] = b
+    for i in range(len(parent)):
+        parent[i] = parent[parent[i]]
+    return np.asarray(ids, dtype=object), np.asarray(parent, dtype=np.int64)
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 25
-) -> DataFrame:
+def _components_frame(spark, ids: np.ndarray, roots: np.ndarray) -> DataFrame:
+    return spark.createDataFrame(
+        pd.DataFrame({"id": ids, "component": ids[roots]}),
+        "id string, component string",
+    )
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """(src, dst) undirected edges → (id, component) with component = the
-    min vertex id (by string order) in each component."""
-    sym = edges.select("src", "dst").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    sym = sym.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
-
-    # Initial label = min(self ∪ neighbours): the same one-shuffle
-    # aggregate the old identity init paid for its distinct (sym is
-    # symmetric, so every vertex appears as src), but it IS round one's
-    # result — the first propagation round is free. (Round 1's pointer
-    # jump over identity labels was `least(x, x)`, a no-op, so this is
-    # exactly equal to the old init plus one round; saves one full
-    # join+agg+jump round per CC invocation, guide §1.2.)
-    labels = (
-        sym.groupBy(F.col("src").alias("id"))
-        .agg(F.least(F.min("dst"), F.col("id")).alias("component"))
-        .localCheckpoint()
-    )
-
-    # Broadcast fast path guard: the label table is |V|-sized; counting
-    # the just-materialized checkpoint is one cheap job. (The r8/r9
-    # profiling showed the loop is sequential-stage-latency-bound, not
-    # data-bound: each shuffle-join round runs ~4 AQE stages back to
-    # back. Broadcasting the labels turns the propagate join and the
-    # pointer jump into map-side probes — one shuffle stage per round.)
-    n_labels = labels.count()
-    bcast = n_labels <= _CC_BCAST_MAX_LABELS
-
-    prev_mat = None  # previous round's materialized frame (for unpersist)
-    for i in range(max_iterations):
-        if bcast:
-            # min over neighbours' labels, grouped by the receiving
-            # vertex: ONE exchange; the labels side rides as a broadcast
-            # hash relation. sym is symmetric, so nbr covers every id
-            # and the join back to labels is inner-complete.
-            nbr = (
-                sym.join(F.broadcast(labels), sym.dst == labels.id)
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            cand = nbr.join(
-                F.broadcast(
-                    labels.select(
-                        F.col("id").alias("_lid"),
-                        F.col("component").alias("old_component"),
-                    )
-                ),
-                nbr.id == F.col("_lid"),
-            ).select(
-                "id",
-                "old_component",
-                F.least("nbr_min", "old_component").alias("component"),
-            )
-            # pointer jumping, as below — the lookup side is the same
-            # broadcast labels relation (component values are vertex ids)
-            lbl_of = labels.select(
-                F.col("id").alias("component"), F.col("component").alias("comp2")
-            )
-            new_labels = (
-                cand.join(F.broadcast(lbl_of), "component", "left")
-                .select(
-                    "id",
-                    "old_component",
-                    F.least(
-                        F.col("component"), F.coalesce("comp2", F.col("component"))
-                    ).alias("component"),
-                )
-            )
-        else:
-            # candidate labels flowing along edges: neighbour's current label
-            propagated = (
-                sym.join(labels, sym.dst == labels.id)
-                .select(sym.src.alias("id"), "component")
-            )
-            new_labels = (
-                labels.select("id", F.col("component").alias("old_component"))
-                .join(
-                    labels.select("id", "component")
-                    .unionAll(propagated)
-                    .groupBy("id")
-                    .agg(F.min("component").alias("component")),
-                    "id",
-                )
-            )
-            # pointer jumping: replace each label by its label's label, so a
-            # chain's distance-to-root halves every round and convergence is
-            # O(log diameter) rounds instead of O(diameter). Every component
-            # value is itself a vertex id, so the self-join always resolves.
-            # The lookup side is the PREVIOUS round's materialized labels —
-            # self-joining the unmaterialized new_labels would recompute it.
-            lbl_of = labels.select(
-                F.col("id").alias("component"), F.col("component").alias("comp2")
-            )
-            new_labels = (
-                new_labels.join(lbl_of, "component", "left")
-                .select(
-                    "id",
-                    "old_component",
-                    F.least(
-                        F.col("component"), F.coalesce("comp2", F.col("component"))
-                    ).alias("component"),
-                )
-            )
-        # ONE job per round: materializing the frame and the fixpoint
-        # check share it — the old label rides along, so no separate
-        # change-detection join. Lineage is cut every few rounds.
-        new_labels = (
-            new_labels.localCheckpoint() if i % 4 == 3 else new_labels.persist()
-        )
-        changed = (
-            new_labels.filter(F.col("component") != F.col("old_component"))
-            .limit(1)
-            .count()
-        )
-        if prev_mat is not None:
-            prev_mat.unpersist()
-        prev_mat = new_labels
-        labels = new_labels.select("id", "component")
-        if changed == 0:
-            break
-    return labels
+    min vertex id (by string order) in each component. Self-loops are
+    dropped, so a vertex with no other edge does not appear."""
+    return _components_frame(edges.sparkSession, *_union_find_roots(edges))
 
 
 def build_groups(
@@ -199,27 +107,18 @@ def build_groups(
         seeds = spark.createDataFrame(seed_pairs, ["src", "dst"])
         edges = edges.unionAll(seeds)
 
-    comps = connected_components(edges)
-    canon = (
-        comps.withColumn("score", id_score(F.col("id")))
-        .groupBy("component")
-        .agg(
-            F.min_by("id", F.struct(F.col("score"), F.col("id"))).alias("group_id"),
-            F.count("*").alias("n_members"),
-        )
-    )
-    groups = comps.join(canon, "component").select("id", "group_id", "n_members")
-    # the canary's predicate is fully determined by the component-sized
-    # canon frame — checking it there skips re-evaluating the
-    # vertex-sized comps⋈canon join just to probe existence (guide
-    # §1.2; the warning fires for exactly the same components)
-    oversized = canon.filter(F.col("n_members") > clique_warn_size)
-    n_big = oversized.limit(1).count()
-    if n_big:
+    ids, roots = _union_find_roots(edges)
+    if len(roots) and np.bincount(roots).max() > clique_warn_size:
         # the reference's correctness canary (main.rs:131-133); stderr —
         # stdout carries perfbench's JSON result
         print(
             f"WARNING: equivalence group(s) larger than {clique_warn_size} members detected",
             file=sys.stderr,
         )
-    return groups.select("id", "group_id")
+    comps = _components_frame(spark, ids, roots)
+    canon = (
+        comps.withColumn("score", id_score(F.col("id")))
+        .groupBy("component")
+        .agg(F.min_by("id", F.struct(F.col("score"), F.col("id"))).alias("group_id"))
+    )
+    return comps.join(canon, "component").select("id", "group_id")

@@ -51,7 +51,7 @@ def build_graph(
     (nextflow/01_create_subgraph.nf:14-70): an eager
     ``localCheckpoint``. Besides avoiding recompute, this TRUNCATES PLAN
     LINEAGE — without it each stage's logical tree embeds every upstream
-    stage's tree (edges ⊃ merged ⊃ assigned ⊃ CC-loop ⊃ per-source
+    stage's tree (edges ⊃ merged ⊃ assigned ⊃ groups ⊃ per-source
     melts), and Catalyst re-analyses that combinatorially-growing tree
     on every downstream action: planning time, not IO, becomes the
     bottleneck. At cluster scale the blocks live on executor local

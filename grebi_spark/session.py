@@ -75,14 +75,14 @@ def get_spark(
         # the harness events table stores TIMESTAMP(NANOS) which the Spark
         # parquet reader rejects by default; read as long (nanos since epoch)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Catalyst constraint propagation accumulates constraint SETS
-        # across plan generations — and localCheckpoint PRESERVES them
-        # (originConstraints), so a long incremental-verb sequence makes
-        # every later fold's ANALYSIS super-linear (measured: one
-        # count-delta join analyzing in 7-12 s by fold 18, 0.01 s with
-        # propagation off; fold latency 6× over 30 folds). The engine's
-        # filters are all explicit, so the rule buys nothing here — the
-        # standard mitigation for iterative/maintained-plan workloads.
+        # Catalyst constraint propagation infers and carries constraint
+        # sets through every plan it optimises; the engine's filters are
+        # all explicit, so the rule buys no pruning and costs planning
+        # time. Measured on the perfbench build (seed 301, 4 cores, 2 GB
+        # driver, three traced builds each): 6.1-6.8 s per build with it
+        # off, 7.1-7.5 s with it on; over five maintenance verbs
+        # (scripts_dev/soak_maintain.py, three runs each) 16.4-18.2 s off,
+        # 17.6-18.5 s on.
         .config("spark.sql.constraintPropagation.enabled", "false")
         # managed (bucketed) tables go to a scratch warehouse, never the cwd
         .config(

@@ -185,13 +185,15 @@ def test_store_routes_run_no_spark_jobs(spark, server):
         f"{base}/suggest?q=hyp",
     )
     sc = spark.sparkContext
-    no_group = set(sc.statusTracker().getJobIdsForGroup(None))
     before = _job_id_after_marker(sc)
     for path in paths:
         st, body = _get(server, path)
         assert st == 200 and body, path
     assert _job_id_after_marker(sc) == before + 1
-    assert set(sc.statusTracker().getJobIdsForGroup(None)) == no_group
+    # no job without a group started after the first marker; older ids
+    # are not compared, because the status store evicts its oldest jobs
+    # (spark.ui.retainedJobs) whenever a new one pushes it over the limit
+    assert not [j for j in sc.statusTracker().getJobIdsForGroup(None) if j > before]
 
 
 def _frame_node_documents(g) -> dict[str, dict]:

@@ -247,3 +247,48 @@ def test_mega_clique_100k_aliases_within_memory_bounds(spark):
     assert len(id_rows[0]["source_ids"]) == n + 1  # aliases + hub id
     assert len(hub["source_ids"]) == n + 1
     print(f"mega-clique 100k: {wall:.1f}s", flush=True)
+
+
+def test_sources_sharing_no_identifier_keep_their_ids_values_and_keys(spark):
+    """With no equivalence group at all, assign_ids' rewrites are
+    identities: each node keeps its entity's only alias as its id, and
+    values and property keys that name other entities stay as they are
+    (the short numeric ``42`` is no identifier, so it links nothing)."""
+    from grebi_spark.pipeline import build_graph
+
+    def source(ds, rows):
+        return spark.createDataFrame(
+            [("sg", ds, e, k, v, None) for e, k, v in rows],
+            "subgraph string, datasource string, entity_id string,"
+            " prop_key string, value string, value_props string",
+        )
+
+    rows = {
+        "dsa": [
+            ("a:1", "id", "a:1"),
+            ("a:1", "grebi:type", "t:A"),
+            ("a:1", "grebi:name", "alpha"),
+            ("a:1", "rel:to", "b:1"),
+            ("a:1", "owl:sameAs", "42"),
+            ("a:2", "id", "a:2"),
+            ("a:2", "grebi:type", "t:A"),
+        ],
+        "dsb": [
+            ("b:1", "id", "b:1"),
+            ("b:1", "grebi:type", "t:B"),
+            ("b:1", "a:2", "x"),
+            ("b:1", "rel:to", "a:1"),
+        ],
+    }
+    g = build_graph(
+        [source(ds, r) for ds, r in rows.items()],
+        SubgraphConfig(exclude_edges=("id",)),
+    )
+    assert g.groups.collect() == []
+    got = sorted(
+        (r["node_id"], r["prop_key"], r["value"], r["datasources"], r["source_ids"])
+        for r in g.merged.collect()
+    )
+    want = sorted((e, k, v, [ds], [e]) for ds, r in rows.items() for e, k, v in r)
+    assert got == want
+    assert sorted(r["node_id"] for r in g.nodes.collect()) == ["a:1", "a:2", "b:1"]
